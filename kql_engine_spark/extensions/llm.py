@@ -124,7 +124,9 @@ _CACHED_REL_RE = _re.compile(r"(?m)^[\s+:|-]*InMemoryRelation\b")
 def _est_scan_tasks(df: DataFrame, logical: str | None = None) -> int | None:
     """Expected file-scan task count, mirroring Spark's FilePartition
     bin-packing (maxSplitBytes = min(maxPartitionBytes, max(openCost,
-    padded/parallelism))), computed from driver-side file stats. Round
+    padded/parallelism))), computed from driver-side file stats and the
+    session's own split conf, which is what the scan will use (the engine
+    never changes it per query). Round
     12 (ADVICE): replaces df.rdd.getNumPartitions(), which forced full
     physical-plan + RDD-lineage compilation on every text-plugin
     translation and read a pre-AQE count. File-less IN-MEMORY sources
@@ -2130,7 +2132,6 @@ def _similarity_search_ivfpq(ptr, df: DataFrame, args) -> DataFrame:
     ).withColumn("__v", array_to_vector(arr))
     if idx_path is not None:
         # prebuilt index: no fit, no encode — read centroids/books/codes
-        ptr._scan_unknown = True  # the code store is an unsized scan
         books, centers, codes_df, idx_meta = _ann_load_index(
             spark, idx_path, nlist, m, dim, "similarity_search_ivfpq"
         )
@@ -3096,7 +3097,6 @@ def _index_stats(ptr, df: DataFrame, args) -> DataFrame:
         raise KqlSemanticError(f"{what}('path') takes exactly 1 argument")
     path = _const_str(args[0], what)
     spark = df.sparkSession
-    ptr._scan_unknown = True  # store reads are unsized scans
     try:
         meta = spark.read.parquet(path + "/meta").collect()[0]
     except Exception as exc:
@@ -3220,7 +3220,6 @@ def _dedup_near(ptr, df: DataFrame, args) -> DataFrame:
 
     n_bands, rows_per_band = _minhash_shape(thr)
     if idx_path is not None:
-        ptr._scan_unknown = True  # the signature store is an unsized scan
         sigs, _meta = _minhash_load_index(
             df, idc, text, idx_path, "dedup_near",
             n_bands=n_bands, rows_per_band=rows_per_band,
@@ -3354,7 +3353,6 @@ def _dedup_clusters(ptr, df: DataFrame, args) -> DataFrame:
 
     n_bands, rows_per_band = _minhash_shape(thr)
     if idx_path is not None:
-        ptr._scan_unknown = True  # the signature store is an unsized scan
         sigs, _meta = _minhash_load_index(
             df, idc, text, idx_path, what,
             n_bands=n_bands, rows_per_band=rows_per_band,
@@ -3473,7 +3471,6 @@ def _dedup_against(ptr, df: DataFrame, args) -> DataFrame:
         idx_path = _const_str(args[2], what)
         thr = _const_float(args[3], what) if len(args) > 3 else 0.8
         n_bands, rows_per_band = _minhash_shape(thr)
-        ptr._scan_unknown = True  # the signature store is an unsized scan
         _store_check(spark, idx_path, what)
         try:
             meta = spark.read.parquet(idx_path + "/meta").collect()[0]
@@ -4827,7 +4824,6 @@ def _decontaminate(ptr, df: DataFrame, args) -> DataFrame:
         # benchmark grams from the persisted store's __ngh column; the
         # store's ngram width must match this query's n (the hashes are a
         # pure function of n — a mismatch would silently never collide)
-        ptr._scan_unknown = True  # the signature store is an unsized scan
         _store_check(spark, bench_store, "decontaminate")
         try:
             bmeta = spark.read.parquet(bench_store + "/meta").collect()[0]
@@ -4878,7 +4874,6 @@ def _decontaminate(ptr, df: DataFrame, args) -> DataFrame:
         # dedup_near and every decontaminate run. The kernel is
         # deterministic, so flags are IDENTICAL to the in-session path
         # (identity law in tests/test_llm_metamorphic.py).
-        ptr._scan_unknown = True  # the signature store is an unsized scan
         sigs, _meta = _minhash_load_index(
             df, idc, text, idx_path, "decontaminate", ngram_n=n
         )

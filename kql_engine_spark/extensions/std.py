@@ -2160,5 +2160,4 @@ def _sink_bucketed(ptr, df, args):
     if df.isStreaming:
         raise KqlSemanticError("sink_bucketed: streaming input not supported")
     write_bucketed(df, table, buckets, key, sort_by=sortcol)
-    ptr._scan_unknown = True  # the read-back managed table is unsized
     return read_table(df.sparkSession, table)

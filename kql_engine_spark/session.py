@@ -12,6 +12,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory() -> str:
+    """Driver heap sized to the host: a quarter of physical memory, clamped
+    to 2-6 GiB. In local mode the driver JVM is the whole engine, and a
+    heap larger than the machine lets it grow until the kernel kills it.
+    SPARK_DRIVER_MEM overrides."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf (non-POSIX)
+        return "4g"
+    return f"{min(6, max(2, total // (4 << 30)))}g"
+
+
 def get_spark(app: str = "kql-engine-spark", master: str | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
     master = master or f"local[{cpus}]"
@@ -50,6 +62,13 @@ def get_spark(app: str = "kql-engine-spark", master: str | None = None) -> Spark
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "8MB"),
         )
+        # Spark sizes each scan's split as min(maxPartitionBytes,
+        # max(openCostInBytes, scan_bytes / cores)), so the open cost is the
+        # floor for small scans. At the 4MB default a small file with
+        # several row groups (sf10 `documents`: 4.5MB, 5 row groups) scans
+        # as 1-2 tasks; 1MB spreads it over the cores (BASELINE.md round 13,
+        # b10), while scans above 8MB per core keep 8MB splits.
+        .config("spark.sql.files.openCostInBytes", "1MB")
         # Runtime bloom-filter pushdown (round 11): once a filtered dim
         # side outgrows the broadcast threshold, the fact side shuffles
         # ALL its rows into a sort-merge join — the sf10 cost center on
@@ -74,7 +93,7 @@ def get_spark(app: str = "kql-engine-spark", master: str | None = None) -> Spark
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.ansi.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )

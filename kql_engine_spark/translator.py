@@ -809,15 +809,6 @@ class PipeTranslator:
         # translate_pipe finished (translate_pipe restores the outer
         # value; join/lookup/source consumers read the nested result here)
         self._last_pipe_bytes: int | None = None
-        # adaptive scan-split bookkeeping (round 13, see _adapt_scan_split):
-        # accumulated file bytes of every catalog-table RESOLUTION this
-        # query makes (a self-join scanning lineitem twice counts it
-        # twice — under-counting would over-lower the split), and whether
-        # any source's size is unknowable (registered DataFrame,
-        # externaldata, external_table, matview) — unknown disables the
-        # per-query split lowering so unsized scans never over-split
-        self._scan_bytes = 0
-        self._scan_unknown = False
         # Pipeline SHAPE tail (round 12): "agg" after a summarize,
         # "agg_filtered" once a where follows it (projections keep the
         # state, anything else clears it). t_join reads it to spot the
@@ -911,12 +902,6 @@ class PipeTranslator:
             if n < 0:
                 raise KqlSemanticError("truncationmaxrecords must be >= 0")
             df = df.limit(n)
-        # per-query scan-split sizing (see _adapt_scan_split): applies the
-        # lever only when every scanned source's size is known
-        if not self.streaming:
-            split_input = None if self._scan_unknown else self._scan_bytes
-            _LAST_SPLIT_INPUT[self.spark] = split_input
-            _adapt_scan_split(self.spark, split_input)
         return df
 
     def translate_pipe(self, pipe: Pipe) -> DataFrame:
@@ -1042,7 +1027,6 @@ class PipeTranslator:
                 fmtl, "csv" if fmtl in seps else fmtl
             )
             reader = self.spark.read.format(fmt).schema(schema)
-            self._scan_unknown = True  # external files: size unknowable
             if fmtl in seps:
                 reader = reader.option("sep", seps[fmtl])
             if fmtl == "multijson":
@@ -1073,7 +1057,6 @@ class PipeTranslator:
                     f"{lname}() takes a single constant string name"
                 )
             getter = getattr(self.catalog, lname)
-            self._scan_unknown = True  # path outside the sized catalog
             return getter(args[0].value)
         bound = self.lets.get(name)
         if not isinstance(bound, Lambda) or not isinstance(bound.body, Pipe):
@@ -1136,10 +1119,6 @@ class PipeTranslator:
             raise KqlSemanticError(f"let {name!r} is not tabular")
         df = self.catalog.table(name, streaming=self.streaming)
         self._src_bytes = self.catalog.file_size(name)
-        if self._src_bytes is None:
-            self._scan_unknown = True
-        else:
-            self._scan_bytes += self._src_bytes
         if (
             getattr(self, "want_ingest_meta", False)
             and not self.streaming
@@ -3466,160 +3445,6 @@ _PLAN_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], Data
 )
 _PLAN_CACHE_CAP = 256
 
-# adaptive scan-split state: (ceiling, last value this engine set) per
-# session — the ceiling is the session's own configured value; a user
-# changing the conf mid-session adopts their new value as the ceiling
-_SPLIT_STATE: "weakref.WeakKeyDictionary[SparkSession, tuple[int, int]]" = (
-    weakref.WeakKeyDictionary()
-)
-# per-cached-plan scan-split input (total known bytes or None), so a plan
-# cache HIT re-applies its own target instead of inheriting the previous
-# query's (round-13 review); and the most recent translation's input, the
-# value the cache-store path records
-_SPLIT_INPUTS: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-_LAST_SPLIT_INPUT: "weakref.WeakKeyDictionary[SparkSession, object]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def _adapt_scan_split(spark: SparkSession, total_bytes: int | None) -> None:
-    """Per-query scan-split sizing (round 13). The session's configured
-    spark.sql.files.maxPartitionBytes (8MB in get_spark; >=128MB on a
-    real cluster) is right for warehouse-sized scans, but a query whose
-    WHOLE input is a few MB then scans as 1-4 tasks: sf10 b10's 4.5MB
-    compressed text corpus is 5 row groups = 1 task at 8MB splits, and
-    the measured 3.4x fix — a GLOBAL 1MB split — regressed the full
-    suite 42% by over-splitting every big scan (BASELINE.md round 12).
-    The adaptive middle: after translating a query whose every source is
-    a size-known catalog file, lower the split target to
-    total_bytes/(2*parallelism) — never below 1MB, never above the
-    session's own ceiling — and RESTORE the ceiling whenever any source
-    is unsized (registered DataFrames, externaldata, external tables,
-    index/sig stores) so unknown scans never over-split. Parquet cannot
-    split inside a row group, so the lever only converts multi-row-group
-    small files into parallel tasks; at 100 TB every scan exceeds the
-    ceiling and this is a no-op. Perf-only; plan-cache hits re-apply
-    their own recorded target (_SPLIT_INPUTS, round-13 review). Disable:
-    KQL_ENGINE_ADAPTIVE_SPLIT=0."""
-    if _os.environ.get("KQL_ENGINE_ADAPTIVE_SPLIT", "1") == "0":
-        return
-    try:
-        ju = spark._jvm.org.apache.spark.network.util.JavaUtils  # noqa: SLF001
-        cur = int(ju.byteStringAsBytes(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB")
-        ))
-        state = _SPLIT_STATE.get(spark)
-        if state is None or cur != state[1]:
-            # first sight, or the conf differs from the value THIS engine
-            # last set — the user changed it; their value is the new
-            # ceiling. (Residual ambiguity: a user setting exactly the
-            # engine's last target is indistinguishable without conf
-            # listeners; the engine may later restore the old ceiling.)
-            state = (cur, cur)
-        ceiling = state[0]
-        if total_bytes is None or total_bytes <= 0:
-            target = ceiling
-        else:
-            par = max(spark.sparkContext.defaultParallelism, 1)
-            target = min(ceiling, max(total_bytes // (2 * par), 1 << 20))
-        if target != cur:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", str(int(target)))
-        _SPLIT_STATE[spark] = (ceiling, target)
-    except Exception:  # pragma: no cover — perf-only, never break a query
-        pass
-
-
-# Round 14 (ADVICE): _adapt_scan_split mutates a SESSION conf, but kql()
-# returns LAZY DataFrames — translating a small query after a big one and
-# then executing the big DataFrame used to run it at the small query's
-# split target (the 42% over-split regression class BASELINE.md round 12
-# documents, now reachable only through deferred actions). Spark offers
-# no per-plan split knob (maxPartitionBytes is not a read option, and a
-# cloned session's conf is ignored once the plan has operators above the
-# scan — both measured), so the fix is to pin the target to the RETURNED
-# DataFrame: kql() wraps its result in a subclass whose action methods
-# re-apply the query's own recorded split input (through the normal
-# _adapt_scan_split ceiling logic) immediately before delegating.
-# Actions on DERIVED frames (result.filter(...).collect()) fall back to
-# the last-applied target — exactly the pre-round-14 behavior — and
-# concurrent actions from multiple threads still race on the session
-# conf (perf-only; results are never wrong).
-_PINNED_ACTIONS = (
-    "collect", "count", "show", "toPandas", "toArrow", "toLocalIterator",
-    "foreach", "foreachPartition", "head", "take", "tail", "first",
-    "isEmpty", "checkpoint", "localCheckpoint", "persist", "cache",
-    "summary", "describe", "toJSON", "writeTo", "explain",
-)
-_PINNED_CLS: dict[type, type] = {}
-
-
-def _build_pinned_cls(base: type) -> type:
-    import functools
-
-    def _reapply(self) -> None:
-        _adapt_scan_split(self.sparkSession, self._kql_split_input)
-
-    def _wrap(fn):
-        @functools.wraps(fn)
-        def method(self, *a, **kw):
-            _reapply(self)
-            return fn(self, *a, **kw)
-
-        return method
-
-    ns: dict = {"_kql_split_input": None}
-    for name in _PINNED_ACTIONS:
-        fn = getattr(base, name, None)
-        if callable(fn):
-            ns[name] = _wrap(fn)
-    # `write` (property) and `rdd` (cached_property) need descriptor
-    # delegation rather than a plain function wrap
-    for name in ("write", "rdd"):
-        desc = None
-        for k in base.__mro__:
-            if name in k.__dict__:
-                desc = k.__dict__[name]
-                break
-        if desc is None:  # pragma: no cover - defensive
-            continue
-
-        def getter(self, _desc=desc, _base=base):
-            _reapply(self)
-            return _desc.__get__(self, _base)
-
-        ns[name] = property(getter)
-    return type("KqlSplitPinnedDataFrame", (base,), ns)
-
-
-def _pin_split_on_actions(df: DataFrame, split_input) -> DataFrame:
-    """Return `df` re-wrapped so its actions first re-apply this query's
-    scan-split target (see the block comment above). Streaming frames
-    pass through (their actions go via writeStream, and the split lever
-    never applies to them)."""
-    try:
-        if df.isStreaming:
-            return df
-        base = type(df)
-        if getattr(base, "_kql_split_input", False) is not False:
-            base = base.__mro__[1]  # never stack pins on a pinned frame
-        cls = _PINNED_CLS.get(base)
-        if cls is None:
-            cls = _build_pinned_cls(base)
-            _PINNED_CLS[base] = cls
-        out = cls(df._jdf, df.sparkSession)  # noqa: SLF001
-        out._kql_split_input = split_input
-        # engine-attached python-side attributes (e.g. t_render's
-        # _kql_render metadata) live on the OLD wrapper object — carry
-        # them over or `render` loses its chart spec
-        for k, v in df.__dict__.items():
-            if k.startswith("_kql") and k != "_kql_split_input":
-                setattr(out, k, v)
-        return out
-    except Exception:  # pragma: no cover — perf-only, never break a query
-        return df
-
 # Volatility is decided on the PARSED AST, not by substring sniffing (round-5
 # fix: a `sample_rate` column used to defeat caching, and `"now("` inside a
 # string literal used to false-positive). A plan is volatile — translated
@@ -4567,14 +4392,6 @@ def kql(
         plans = _PLAN_CACHE.setdefault(spark, {})
         hit = plans.get(plan_key)
         if hit is not None:
-            # re-apply the query's scan-split target (round-13 review: a
-            # cache hit used to execute under whatever the PREVIOUS query
-            # set — a cached 1GB scan after a tiny query ran 8x
-            # over-split). Missing entry -> None -> ceiling restored (the
-            # safe default for big scans).
-            _adapt_scan_split(
-                spark, _SPLIT_INPUTS.get(spark, {}).get(plan_key)
-            )
             return hit
     if catalog is None:
         per_session = _CATALOG_CACHE.setdefault(spark, {})
@@ -4615,18 +4432,9 @@ def kql(
         raise KqlSemanticError(
             "semantic error: " + msg.split(";")[0].strip() + tag
         ) from exc
-    # pin this query's scan-split target to the returned frame so
-    # DEFERRED actions re-apply it (round 14 ADVICE — see
-    # _pin_split_on_actions); cached plans are stored pinned, so a cache
-    # hit keeps its own target across any interleaving
-    out = _pin_split_on_actions(out, _LAST_SPLIT_INPUT.get(spark))
     if plan_key is not None and not _plan_is_volatile(q):
         plans = _PLAN_CACHE.setdefault(spark, {})
         if len(plans) >= _PLAN_CACHE_CAP:
             plans.pop(next(iter(plans)))
         plans[plan_key] = out
-        splits = _SPLIT_INPUTS.setdefault(spark, {})
-        if len(splits) >= _PLAN_CACHE_CAP:
-            splits.pop(next(iter(splits)))
-        splits[plan_key] = _LAST_SPLIT_INPUT.get(spark)
     return out

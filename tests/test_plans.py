@@ -830,100 +830,71 @@ def test_sink_bucketed_plugin_zero_exchange_downstream(spark):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
-def test_adaptive_scan_split_lowers_and_restores(spark, run_kql):
-    # round 13: a query whose every source is a size-known catalog file
-    # lowers spark.sql.files.maxPartitionBytes to total/(2*parallelism),
-    # floored at 1MB and capped at the session ceiling; any unsized
-    # source (datatable-only = no file scan, externaldata, index stores)
-    # restores the ceiling. Perf-only — results are pinned elsewhere.
+def test_kql_and_actions_leave_session_conf_unchanged(spark, tmp_path):
+    # session conf is shared by every query on the session, so no kql()
+    # call and no action may leave it changed: sized and unsized sources,
+    # a plan-cache hit, actions on an earlier frame, and a call that raises
+    import uuid
+
+    import pytest
+
+    from kql_engine_spark.errors import KqlSemanticError
     from kql_engine_spark.translator import kql
+    from tests.conftest import SF_DIR
+
+    tag = uuid.uuid4().hex[:8]
+    # the catalog's one-time nanosAsLong write happens on the first bind
+    # of a timestamp[ns] table, so it must come before the snapshot
+    kql(spark, "events | take 1", sf_dir=SF_DIR).collect()
+    before = dict(spark.conf.getAll)
+
+    def unchanged(after: str) -> None:
+        assert dict(spark.conf.getAll) == before, f"conf changed after {after}"
+
+    sized_text = f"documents | summarize n = count()\n// sized_{tag}"
+    sized = kql(spark, sized_text, sf_dir=SF_DIR)
+    unchanged("kql() on a sized source")
+    unsized = kql(spark, f"range x from 1 to 5 step 1\n// unsized_{tag}", sf_dir=SF_DIR)
+    unchanged("kql() on an unsized source")
+    assert kql(spark, sized_text, sf_dir=SF_DIR) is sized
+    unchanged("a plan-cache hit")
+    assert sized.collect()[0][0] > 0
+    unchanged("collect")
+    assert len(unsized.toPandas()) == 5
+    unchanged("toPandas")
+    assert sized.rdd.count() == 1
+    unchanged(".rdd")
+    unsized.write.mode("overwrite").parquet(str(tmp_path / "out"))
+    unchanged(".write")
+    with pytest.raises(KqlSemanticError):
+        kql(spark, f"documents | project no_such_col_{tag}", sf_dir=SF_DIR)
+    unchanged("a kql() that raises")
+
+
+def test_multi_row_group_small_file_scans_on_every_core(spark, tmp_path):
+    # a small file with several row groups must scan on every core without
+    # any per-query conf change: the session's split rule (8MB splits,
+    # 1MB open cost, see get_spark) gives one split per core here, and a
+    # parquet row group lands in the split holding its midpoint
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
     from kql_engine_spark.catalog import Catalog
-    from tests.conftest import SF_DIR
-
-    conf = lambda: spark.conf.get("spark.sql.files.maxPartitionBytes")  # noqa: E731
-    cat = Catalog(spark, SF_DIR)
-    kql(spark, "region | count", catalog=cat)
-    # sf0.001 region is a few KB -> floor
-    assert conf() == str(1 << 20)
-    kql(spark, "print x = 1", catalog=cat)
-    assert conf() != str(1 << 20)  # restored to the session ceiling
-    ceiling = conf()
-    kql(spark, "documents | summarize n = count()", catalog=cat)
-    assert conf() == str(1 << 20)
-    # a user-set value becomes the new ceiling
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "64MB")
-    try:
-        kql(spark, "print x = 1", catalog=cat)
-        assert conf() == "64MB" or conf() == str(64 << 20)
-        kql(spark, "region | count", catalog=cat)
-        assert conf() == str(1 << 20)
-        kql(spark, "print x = 2", catalog=cat)
-        assert conf() in ("64MB", str(64 << 20))
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", ceiling)
-        kql(spark, "print x = 3", catalog=cat)
-
-
-def test_adaptive_scan_split_reapplied_on_cache_hit(spark):
-    # round-13 review: a plan-cache hit used to execute under whatever
-    # split the PREVIOUS query set; now each cached plan re-applies its
-    # own recorded target
-    import uuid
-
     from kql_engine_spark.translator import kql
-    from tests.conftest import SF_DIR
 
-    conf = lambda: spark.conf.get("spark.sql.files.maxPartitionBytes")  # noqa: E731
-    # cacheable (catalog=None) unsized query -> recorded input None
-    tag = uuid.uuid4().hex[:8]
-    qa = f"print cachehit_{tag} = 1"
-    kql(spark, qa, sf_dir=SF_DIR)
-    ceiling = conf()
-    # a small file-backed query lowers the split...
-    kql(spark, f"region | count\n// lower_{tag}", sf_dir=SF_DIR)
-    assert conf() == str(1 << 20)
-    # ...and the CACHE HIT on the unsized query restores its own target
-    kql(spark, qa, sf_dir=SF_DIR)
-    assert conf() == ceiling
-    # symmetric: the small query's cache hit re-lowers
-    qb = f"region | count\n// cached_small_{tag}"
-    kql(spark, qb, sf_dir=SF_DIR)
-    kql(spark, qa, sf_dir=SF_DIR)
-    assert conf() == ceiling
-    kql(spark, qb, sf_dir=SF_DIR)  # cache hit
-    assert conf() == str(1 << 20)
-    kql(spark, qa, sf_dir=SF_DIR)  # restore for later tests
-
-
-def test_split_target_pinned_to_deferred_actions(spark):
-    # round 14 (ADVICE): kql() returns LAZY DataFrames — an action on a
-    # frame translated EARLIER must run under its own recorded split
-    # target, not whatever the latest translation set. kql() pins the
-    # target to the returned frame's action methods.
-    import uuid
-
-    from kql_engine_spark.translator import kql
-    from tests.conftest import SF_DIR
-
-    conf = lambda: spark.conf.get("spark.sql.files.maxPartitionBytes")  # noqa: E731
-    tag = uuid.uuid4().hex[:8]
-    big = kql(spark, f"print deferred_{tag} = 1", sf_dir=SF_DIR)  # unsized
-    ceiling = conf()
-    small = kql(spark, f"region | count\n// d_{tag}", sf_dir=SF_DIR)
-    assert conf() == str(1 << 20)  # the small query lowered the session conf
-    # executing the EARLIER frame re-applies ITS own target first
-    assert big.collect()[0][0] == 1
-    assert conf() == ceiling
-    assert small.collect()[0][0] > 0
-    assert conf() == str(1 << 20)
-    # property-shaped actions (.rdd, .write) go through the pin too
-    big.rdd
-    assert conf() == ceiling
-    small.count()
-    assert conf() == str(1 << 20)
-    assert len(big.take(1)) == 1
-    assert conf() == ceiling
-    kql(spark, f"print restore_{tag} = 1", sf_dir=SF_DIR)
+    per_group = 150_000  # 1.2MB of incompressible int64 per row group
+    x = np.random.default_rng(7).integers(0, 2**62, 5 * per_group, dtype=np.int64)
+    path = str(tmp_path / "rg5.parquet")
+    pq.write_table(
+        pa.table({"x": x}), path, row_group_size=per_group,
+        compression="none", use_dictionary=False,
+    )
+    assert pq.ParquetFile(path).metadata.num_row_groups == 5
+    df = kql(spark, "rg5 | project x", catalog=Catalog(spark, str(tmp_path)))
+    tasks = df.select(F.spark_partition_id()).distinct().count()
+    assert tasks == min(5, spark.sparkContext.defaultParallelism)
 
 
 def test_write_bucketed_never_deletes_index_stores(spark, tmp_path):
