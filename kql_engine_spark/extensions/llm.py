@@ -2655,16 +2655,22 @@ def _min_id_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     return comp.filter(F.col("node") == F.col("comp")).select(F.col("node"))
 
 
+# Round caps for connected components (see _component_labels): phase 1's
+# linear propagation rounds, then phase 2's large-star/small-star rounds.
+_GRAPH_LINEAR_ROUNDS = 8
+_GRAPH_CC_ROUNDS = 64
+
+
 def _component_labels(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Connected components, two-phase (round 10):
 
-    Phase 1 — linear smallest-id propagation to fixpoint, capped at
-    KQL_ENGINE_GRAPH_LINEAR_ROUNDS (default 8). One shuffle + one 1-row
-    probe per round; round r covers diameter r. Near-dup clusters (the
-    dedup_near/dedup_simhash caller) have diameter 1-3, so this phase
-    almost always converges — it is ~3x cheaper per round than phase 2
-    (measured: the LS/SS-only round-10 draft regressed dedup_jaccard at
-    sf0.1 6x before this hybrid).
+    Phase 1 — linear smallest-id propagation over the symmetrized edges
+    (_min_label_propagation), capped at _GRAPH_LINEAR_ROUNDS. Round r
+    covers diameter r. Near-dup clusters (the dedup_near/dedup_simhash
+    caller) have diameter 1-3, so this phase almost always converges — it
+    is ~3x cheaper per round than phase 2 (measured: the LS/SS-only
+    round-10 draft regressed dedup_jaccard at sf0.1 6x before this
+    hybrid).
 
     Phase 2 — if phase 1 hits its cap unconverged (a chain longer than
     the cap), fall back to the ALTERNATING large-star/small-star
@@ -2686,53 +2692,64 @@ def _component_labels(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     v != m. Both preserve connectivity and never grow the edge set; at
     the fixpoint every non-root node carries exactly (node -> root)."""
     edges = edges.localCheckpoint(eager=True)
-    linear_rounds = int(os.environ.get("KQL_ENGINE_GRAPH_LINEAR_ROUNDS", "8"))
-    if linear_rounds > 0:
-        sym = edges.union(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    sym = edges.union(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+    comp, converged = _min_label_propagation(nodes, sym, _GRAPH_LINEAR_ROUNDS)
+    return comp if converged else _component_labels_star(nodes, edges)
+
+
+def _min_label_propagation(
+    nodes: DataFrame, edges: DataFrame, rounds: int
+) -> tuple[DataFrame, bool]:
+    """Min-label propagation over directed (src, dst) edges: each round,
+    every src takes the least of its own label and its dst neighbors'
+    labels, so after round r a node's label is the min node id within r
+    forward hops. Returns ((node, comp) labels, converged) after at most
+    `rounds` rounds. Symmetrized edges give connected-component labels
+    (_component_labels); directed edges give the min id reachable forward
+    (the strong-components peel, translator._scc_labels). One shuffle
+    join + one 1-row probe per round."""
+    comp = nodes.withColumn("comp", F.col("node")).localCheckpoint(eager=True)
+    for _ in range(rounds):
+        nb = (
+            edges.join(comp, edges["dst"] == comp["node"])
+            .groupBy("src")
+            .agg(F.min("comp").alias("nbmin"))
         )
-        comp = nodes.withColumn("comp", F.col("node")).localCheckpoint(
-            eager=True
+        # round 18 (guide §2.4): the convergence probe used to be a
+        # SECOND join of the new labels against the old ones — one
+        # extra shuffle join per round over the full node set. The
+        # label changed iff a neighbor minimum undercuts the old
+        # label, which this same projection already knows — carry it
+        # as a flag through the checkpoint and probe with a
+        # shuffle-free filter over the checkpointed partitions
+        # instead. One shuffle join per round removed; labels
+        # bit-identical (least(comp, nbmin) != comp <=> nbmin < comp).
+        new_comp = (
+            comp.join(nb, comp["node"] == nb["src"], "left")
+            .select(
+                F.col("node"),
+                F.least(
+                    F.col("comp"),
+                    F.coalesce(F.col("nbmin"), F.col("comp")),
+                ).alias("comp"),
+                (F.col("nbmin") < F.col("comp")).alias("__chg"),
+            )
+            .localCheckpoint(eager=True)
         )
-        for _ in range(linear_rounds):
-            nb = (
-                sym.join(comp, sym["dst"] == comp["node"])
-                .groupBy("src")
-                .agg(F.min("comp").alias("nbmin"))
-            )
-            # round 18 (guide §2.4): the convergence probe used to be a
-            # SECOND join of the new labels against the old ones — one
-            # extra shuffle join per round over the full node set. The
-            # label changed iff a neighbor minimum undercuts the old
-            # label, which this same projection already knows — carry it
-            # as a flag through the checkpoint and probe with a
-            # shuffle-free filter over the checkpointed partitions
-            # instead. One shuffle join per round removed; labels
-            # bit-identical (least(comp, nbmin) != comp <=> nbmin < comp).
-            new_comp = (
-                comp.join(nb, comp["node"] == nb["src"], "left")
-                .select(
-                    F.col("node"),
-                    F.least(
-                        F.col("comp"),
-                        F.coalesce(F.col("nbmin"), F.col("comp")),
-                    ).alias("comp"),
-                    (F.col("nbmin") < F.col("comp")).alias("__chg"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            changed = new_comp.filter(F.col("__chg")).limit(1).count()
-            comp = new_comp.drop("__chg")
-            if changed == 0:
-                return comp
-    return _component_labels_star(nodes, edges)
+        changed = new_comp.filter(F.col("__chg")).limit(1).count()
+        comp = new_comp.drop("__chg")
+        if changed == 0:
+            return comp, True
+    return comp, False
 
 
 def _component_labels_star(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Large-star/small-star contraction — see _component_labels."""
     from ..errors import KqlLimitError
 
-    rounds = int(os.environ.get("KQL_ENGINE_GRAPH_CC_ROUNDS", "64"))
+    rounds = _GRAPH_CC_ROUNDS
     cur = (
         edges.filter(F.col("src") != F.col("dst"))
         .select("src", "dst")
@@ -2783,8 +2800,7 @@ def _component_labels_star(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     if not converged:
         raise KqlLimitError(
             "connected components did not converge within "
-            f"{rounds} large-star/small-star rounds; raise "
-            "KQL_ENGINE_GRAPH_CC_ROUNDS"
+            f"{rounds} large-star/small-star rounds"
         )
     # star fixpoint: every non-root node has exactly one edge to its root
     roots = cur.groupBy("src").agg(F.min("dst").alias("comp"))
@@ -4680,6 +4696,12 @@ def _pii_redact(ptr, df: DataFrame, args) -> DataFrame:
 
 
 # --------------------------------------------------------------- decontaminate
+# decontaminate's broadcast-safe bound on the benchmark side (see the
+# scale-assumption guard in _decontaminate): on-disk bytes and footer rows
+_DECON_BENCH_WARN_BYTES = 32 * 1024 * 1024
+_DECON_BENCH_WARN_ROWS = 100_000
+
+
 @plugin("decontaminate")
 def _decontaminate(ptr, df: DataFrame, args) -> DataFrame:
     """`T | evaluate decontaminate(textcol, idcol, BenchmarkTable,
@@ -4744,12 +4766,6 @@ def _decontaminate(ptr, df: DataFrame, args) -> DataFrame:
         # bytes, and the parquet-footer ROW COUNT — repetitive text
         # compresses so well that a 500k-row corpus can sit under 5 MB
         # on disk while its kernel pass costs tens of seconds.
-        warn_bytes = int(os.environ.get(
-            "SPARK_GRAFT_DECON_BENCH_WARN_BYTES", str(32 * 1024 * 1024)
-        ))
-        warn_rows = int(os.environ.get(
-            "SPARK_GRAFT_DECON_BENCH_WARN_ROWS", str(100_000)
-        ))
         # the footer row count describes the CATALOG table of that name —
         # consult it only when _resolve_table actually fell through to the
         # catalog (a let-bound view or `as`-named result shadows the name
@@ -4761,9 +4777,9 @@ def _decontaminate(ptr, df: DataFrame, args) -> DataFrame:
             and args[2].name not in ptr.named_results
             else None
         )
-        too_big = (bench_bytes is not None and bench_bytes > warn_bytes) or (
-            bench_rows is not None and bench_rows > warn_rows
-        )
+        too_big = (
+            bench_bytes is not None and bench_bytes > _DECON_BENCH_WARN_BYTES
+        ) or (bench_rows is not None and bench_rows > _DECON_BENCH_WARN_ROWS)
         if too_big:
             import warnings
 
@@ -4783,8 +4799,8 @@ def _decontaminate(ptr, df: DataFrame, args) -> DataFrame:
                 "join of the fact side's n-grams. For corpus-vs-corpus "
                 "matching use dedup_against, or serve both sides from "
                 "prebuilt minhash_index_build stores ('bench_store' / "
-                "'fact_store' forms). Raise "
-                "SPARK_GRAFT_DECON_BENCH_WARN_BYTES / _ROWS to silence.",
+                "'fact_store' forms). Silence with warnings.filterwarnings("
+                "'ignore', category=KqlScaleWarning).",
                 KqlScaleWarning,
                 stacklevel=2,
             )

@@ -415,6 +415,10 @@ def run_scan_partitioned(
     return df.groupBy(key).applyInPandas(func, ctx.out_schema)
 
 
+# pickled-state cap of a streaming scan (see run_scan_streaming)
+_SCAN_MAX_STATE_BYTES = 16 << 20
+
+
 def run_scan_streaming(
     df: DataFrame,
     op: ScanOp,
@@ -432,11 +436,10 @@ def run_scan_streaming(
     snapshots — so state is O(n_steps^2 * row_width), FLAT in stream
     length. The one unbounded vector is a declared variable that
     accumulates per row (e.g. `acc = strcat(s1.acc, text)` in a
-    never-completing sequence); a pickled-state byte cap (env
-    KQL_ENGINE_SCAN_MAX_STATE_BYTES, default 16 MiB) aborts the query
-    with a typed KqlLimitError instead of letting the state store grow
-    without bound — mirroring Kusto's fail-loud query limits."""
-    import os
+    never-completing sequence); a pickled-state byte cap
+    (_SCAN_MAX_STATE_BYTES) aborts the query with a typed KqlLimitError
+    instead of letting the state store grow without bound — mirroring
+    Kusto's fail-loud query limits."""
     import pickle
 
     from pyspark.sql import functions as F
@@ -444,9 +447,9 @@ def run_scan_streaming(
 
     from .errors import KqlLimitError
 
-    max_state = int(
-        os.environ.get("KQL_ENGINE_SCAN_MAX_STATE_BYTES", str(16 << 20))
-    )
+    # read here on the driver: the UDF closure carries the value to the
+    # Python workers
+    max_state = _SCAN_MAX_STATE_BYTES
     ctx = ScanCtx(df, op)
     state_schema = T.StructType([T.StructField("blob", T.BinaryType(), True)])
 
@@ -476,9 +479,9 @@ def run_scan_streaming(
         if len(blob) > max_state:
             raise KqlLimitError(
                 f"streaming scan state ({len(blob)} bytes) exceeds the "
-                f"{max_state}-byte cap (KQL_ENGINE_SCAN_MAX_STATE_BYTES); "
-                "a declared variable is accumulating per-row data in a "
-                "sequence that never completes"
+                f"{max_state}-byte cap; a declared variable is "
+                "accumulating per-row data in a sequence that never "
+                "completes"
             )
         state.update((blob,))
 

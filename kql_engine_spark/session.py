@@ -30,12 +30,12 @@ def get_spark(app: str = "kql-engine-spark", master: str | None = None) -> Spark
     # Default shuffle parallelism = core count; AQE coalesces downward at
     # small scale so toy inputs don't pay 32-task scheduling, while sf1+
     # aggregation/join shuffles use every core. On a cluster set
-    # SPARK_GRAFT_SHUFFLE to O(2-3x total cores).
-    shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE") or cpus
+    # spark.sql.shuffle.partitions to O(2-3x total cores) on the session
+    # passed to kql().
     builder = (
         SparkSession.builder.master(master)
         .appName(app)
-        .config("spark.sql.shuffle.partitions", shuffle)
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -56,12 +56,10 @@ def get_spark(app: str = "kql-engine-spark", master: str | None = None) -> Spark
         # 128MB default puts a whole fact table in ONE scan task (measured
         # 2x on Q1, 9x on JSON extraction at sf1). 8MB keeps all local
         # cores scanning. On a 1000-executor cluster set
-        # SPARK_GRAFT_MAX_PARTITION_BYTES back to >=128MB — task-launch
-        # overhead dominates below that at 100TB.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "8MB"),
-        )
+        # spark.sql.files.maxPartitionBytes back to >=128MB on the session
+        # passed to kql() — task-launch overhead dominates below that at
+        # 100TB.
+        .config("spark.sql.files.maxPartitionBytes", "8MB")
         # Spark sizes each scan's split as min(maxPartitionBytes,
         # max(openCostInBytes, scan_bytes / cores)), so the open cost is the
         # floor for small scans. At the 4MB default a small file with
@@ -81,15 +79,13 @@ def get_spark(app: str = "kql-engine-spark", master: str | None = None) -> Spark
         # side's bloom build is an O(rows) aggregate capped by
         # runtime.bloomFilter.maxNumBits (8MB broadcast) regardless of
         # input size. Bloom filters are conservative (false positives
-        # only) — results never change, rows just skip the shuffle.
+        # only) — results never change, rows just skip the shuffle. A
+        # cluster with other table sizes sets both keys on its own session.
         .config(
             "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            os.environ.get("SPARK_GRAFT_BLOOM_APP_THRESHOLD", "100MB"),
+            "100MB",
         )
-        .config(
-            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-            os.environ.get("SPARK_GRAFT_BLOOM_CREATION_THRESHOLD", "100MB"),
-        )
+        .config("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "100MB")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.ansi.enabled", "false")

@@ -1882,7 +1882,7 @@ class PipeTranslator:
             # innerunique) — pieces could otherwise aggregate different
             # rows (round 11, ADVICE)
             and not self._rowset_nondet
-            and _os.environ.get("KQL_ENGINE_SPLIT_DISTINCT", "1") != "0"
+            and _SPLIT_DISTINCT
             else None
         )
         if split is not None:
@@ -1949,27 +1949,11 @@ class PipeTranslator:
         aggregate already hash-partitioned on the keys. Trade-off: one
         source scan per piece — at scale shuffle bytes dominate rescans,
         and the pieces share the parquet page cache.
-        KQL_ENGINE_SPLIT_DISTINCT=0 disables.
 
-        Round 12 (r11 verdict #2, A/B REJECTED): persisting a join
-        upstream (MEMORY_AND_DISK) so the pieces share one materialization
-        was measured 3x SLOWER than the double execution at sf10
-        (join-upstream mixed agg, cache cleared per run: off 11.3 s vs
-        persist 32.7 s median — the columnar cache build of the 75M-row
-        join output costs far more than re-running the SMJ over
-        page-cached parquet; identical results both ways). Default OFF;
-        KQL_ENGINE_SPLIT_PERSIST=1 opts in for deployments where the
-        re-executed upstream crosses a network shuffle that dwarfs local
-        cache-build cost. Details in BASELINE.md round 12."""
+        The upstream is not persisted for the pieces to share: that was
+        measured 3x slower than re-executing it at sf10 (BASELINE.md
+        round 12)."""
         plain, dist, ordered = split
-        if (
-            _os.environ.get("KQL_ENGINE_SPLIT_PERSIST", "0") == "1"
-            and not work.isStreaming
-        ):
-            from pyspark.storagelevel import StorageLevel
-
-            work = work.persist(StorageLevel.MEMORY_AND_DISK)
-            _register_persist(self.spark, work)
 
         def agg_df(pairs_list):
             cols = [
@@ -2142,7 +2126,8 @@ class PipeTranslator:
         # far below the sum (Q5's customer⋈orders: 3MB of sources, ~0.5MB
         # true). A blown estimate can at worst mis-hint a later broadcast
         # (perf cliff / typed Spark broadcast-size error, never wrong
-        # results); KQL_ENGINE_AUTO_BROADCAST=0 is the escape hatch.
+        # results); a session autoBroadcastJoinThreshold of -1 turns the
+        # hints off.
         self._src_bytes = (
             lbytes + rbytes
             if left_keys and lbytes is not None and rbytes is not None
@@ -2170,11 +2155,8 @@ class PipeTranslator:
         exchange that just ran, and small relative to the join it
         precedes. Applied only when auto-broadcast declined both sides
         (estimates big/unknown) and this side's estimate exceeds the
-        broadcast threshold, so small-fixture plans are untouched.
-        KQL_ENGINE_AQE_PROBE=0 disables."""
-        if shape != "agg_filtered" or not keys:
-            return side
-        if _os.environ.get("KQL_ENGINE_AQE_PROBE", "1") == "0":
+        broadcast threshold, so small-fixture plans are untouched."""
+        if shape != "agg_filtered" or not keys or not _AQE_PROBE:
             return side
         if self.streaming or side.isStreaming:
             return side
@@ -2220,11 +2202,10 @@ class PipeTranslator:
         typed Spark broadcast-size error, never wrong results);
         row-expanding ops reset the estimate to unknown
         (_SIZE_OPAQUE_OPS). Hint the smaller sub-threshold side.
-        Explicit KQL hint.strategy always wins (caller checks);
-        KQL_ENGINE_AUTO_BROADCAST=0 disables. Outer joins only hint the
-        side Spark can legally build: right for LEFT OUTER, left for
-        RIGHT OUTER."""
-        if _os.environ.get("KQL_ENGINE_AUTO_BROADCAST", "1") == "0":
+        Explicit KQL hint.strategy always wins (caller checks). Outer
+        joins only hint the side Spark can legally build: right for LEFT
+        OUTER, left for RIGHT OUTER."""
+        if not _AUTO_BROADCAST:
             return left, right
         thr = _parse_size_bytes(
             self.spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
@@ -3054,8 +3035,7 @@ class PipeTranslator:
                 raise KqlSemanticError(
                     f"graph-match: variable-length edges capped at "
                     f"*..{_GRAPH_VARLEN_CAP} (each hop is one keyed join; "
-                    "Catalyst analysis cost grows with the unroll — raise "
-                    "KQL_ENGINE_GRAPH_VARLEN_CAP if your pattern needs more)"
+                    "Catalyst analysis cost grows with the unroll)"
                 )
             from_field, to_field = (src, dst) if step.forward else (dst, src)
             plain = not getattr(step, "varlen", False)
@@ -3650,25 +3630,20 @@ def _plan_is_volatile(q: Query) -> bool:
 # is pinned with AQE off. Conservative by construction: any source that is
 # not a sized parquet file (registered DataFrame, range, externaldata,
 # wildcard, all-tables search) disables the fast path, and at cluster scale
-# every real table clears the threshold so AQE always runs. Tune/disable
-# via SPARK_GRAFT_SMALL_QUERY_BYTES (0 = off).
-import os as _os
+# every real table clears the threshold so AQE always runs. 0 turns the
+# pin off.
 import threading as _threading
 
-_SMALL_QUERY_BYTES = int(
-    _os.environ.get("SPARK_GRAFT_SMALL_QUERY_BYTES", str(32 * 1024 * 1024))
-)
+_SMALL_QUERY_BYTES = 32 * 1024 * 1024
 
 # Single-task fused plans (round 17, guide §2.4): below this many on-disk
 # source bytes — at most one default scan split of data — AND with every
 # source a single parquet row group (scan unsplittable anyway), each scan
 # is coalesced to 1 partition so the whole query plans with ZERO Exchange
 # (SinglePartition satisfies every clustering requirement): one stage, one
-# task, no shuffle serialization, no reduce-task scheduling. Tune/disable
-# via SPARK_GRAFT_SINGLE_TASK_BYTES / SPARK_GRAFT_SINGLE_TASK=0.
-_SINGLE_TASK_BYTES = int(
-    _os.environ.get("SPARK_GRAFT_SINGLE_TASK_BYTES", str(8 * 1024 * 1024))
-)
+# task, no shuffle serialization, no reduce-task scheduling. -1 turns the
+# fusion off.
+_SINGLE_TASK_BYTES = 8 * 1024 * 1024
 
 # Single-task parse spread (round 17, guide §2.5/§4 "per-task work"): a
 # fused single-task plan serializes EVERY per-row expression on the one
@@ -3683,7 +3658,8 @@ _SINGLE_TASK_BYTES = int(
 # single-row-group local inputs — a cluster-scale scan parallelizes by
 # itself and never enters this mode) and only when the pipe tail above
 # the parse is provably partitioning-insensitive (see
-# _single_task_spread_point). Disable via SPARK_GRAFT_SPREAD_PARSE=0.
+# _single_task_spread_point). A byte floor of sys.maxsize below turns
+# the spread off.
 _EXPENSIVE_ROW_FNS = frozenset(
     {"extractjson", "extract_json", "parse_json", "todynamic", "toobject"}
 )
@@ -3691,9 +3667,12 @@ _EXPENSIVE_ROW_FNS = frozenset(
 # one extra exchange (literal datatables report a 4KB nominal size). 128KB
 # keeps the sf0.01 correctness fixtures ABOVE the floor, so the driver's
 # oracle runs certify the exact spread plan the sf0.1 bench executes.
-_SPREAD_PARSE_MIN_BYTES = int(
-    _os.environ.get("SPARK_GRAFT_SPREAD_PARSE_MIN_BYTES", str(128 * 1024))
-)
+_SPREAD_PARSE_MIN_BYTES = 128 * 1024
+# Plan rewrites that are on in every deployment. Tests turn one off to get
+# the unrewritten plan as a parity reference, so each is read at call time.
+_SPLIT_DISTINCT = True  # PipeTranslator._summarize_split
+_AQE_PROBE = True  # PipeTranslator._aqe_probe
+_AUTO_BROADCAST = True  # PipeTranslator._auto_broadcast
 # integral casts: sum()/sumif() over these is exact integer arithmetic,
 # so partial-aggregation grouping cannot change the result
 _INT_CAST_FNS = frozenset({"tolong", "toint"})
@@ -4039,85 +4018,30 @@ _SMALL_PLAN_LOCK = _threading.Lock()
 # variable-length graph-pattern cap (round 9: raised 8 -> 16 after the
 # incremental-frontier unroll made planning O(hi) joins instead of
 # O(hi^2); 16 covers real reachability patterns with sub-second Catalyst
-# analysis). Deeper patterns: raise via env, planning cost scales ~linearly.
-_GRAPH_VARLEN_CAP = int(_os.environ.get("KQL_ENGINE_GRAPH_VARLEN_CAP", "16"))
+# analysis). Planning cost scales ~linearly with the cap.
+_GRAPH_VARLEN_CAP = 16
 
-
-# Graph caps, read at CALL time (graph ops are rare; tests toggle them):
-# - KQL_ENGINE_GRAPH_PROPAGATION_ROUNDS: directed min-propagation round
-#   cap (distributed SCC path only). Round r covers paths of length
-#   <= r, so this bounds usable graph DIAMETER on the distributed path —
-#   hitting it raises a typed error (round 10; it previously returned
-#   unconverged labels, which the SCC peel would have turned into
-#   spurious singleton components).
-# - KQL_ENGINE_GRAPH_LOCAL_ELEMS: graphs whose node+edge count fits this
-#   bound run exact Tarjan SCC on collected edges (Kusto's make-graph is
-#   an in-memory construct with documented memory caps, so a bounded
+# Graph caps for graph-mark-components kind=strong, read at call time:
+# - _GRAPH_PROPAGATION_ROUNDS: directed min-propagation round cap
+#   (distributed SCC path only). Round r covers paths of length <= r, so
+#   this bounds usable graph DIAMETER on the distributed path — hitting it
+#   raises a typed error (round 10; it previously returned unconverged
+#   labels, which the SCC peel would have turned into spurious singleton
+#   components).
+# - _GRAPH_LOCAL_ELEMS: graphs whose node+edge count fits this bound run
+#   exact Tarjan SCC on collected edges (Kusto's make-graph is an
+#   in-memory construct with documented memory caps, so a bounded
 #   driver-side pass is semantically faithful to the reference surface —
-#   same documented-bounded-collect pattern as the PQ 16k train sample
-#   and the tabular-`in` 1M cap). Graphs beyond it use the distributed
+#   same documented-bounded-collect pattern as the PQ 16k train sample and
+#   the tabular-`in` 1M cap). Graphs beyond it use the distributed
 #   forward/backward peeling, whose round cap is diameter-bounded.
-def _graph_prop_rounds() -> int:
-    return int(_os.environ.get("KQL_ENGINE_GRAPH_PROPAGATION_ROUNDS", "64"))
-
-
-def _graph_local_elems() -> int:
-    return int(_os.environ.get("KQL_ENGINE_GRAPH_LOCAL_ELEMS", "2000000"))
-
-
-def _directed_min_labels(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """(node, lbl) with lbl = min node id REACHABLE FORWARD from node
-    (including itself): directed min-propagation to fixpoint — the
-    one-direction sibling of extensions.llm._component_labels. Round r
-    covers paths of length <= r, so the round cap bounds usable graph
-    DIAMETER; on non-convergence this RAISES (round 10 — previously it
-    returned partial labels, silently wrong downstream). The
-    changed-count driver check is 1 row per round."""
-    from .errors import KqlLimitError
-
-    comp = nodes.withColumn("lbl", F.col("node")).localCheckpoint(eager=True)
-    changed = 1
-    rounds = _graph_prop_rounds()
-    for _ in range(rounds):
-        nb = (
-            edges.join(comp, edges["dst"] == comp["node"])
-            .groupBy("src")
-            .agg(F.min("lbl").alias("nbmin"))
-        )
-        new = (
-            comp.join(nb, comp["node"] == nb["src"], "left")
-            .select(
-                F.col("node"),
-                F.least(
-                    F.col("lbl"), F.coalesce(F.col("nbmin"), F.col("lbl"))
-                ).alias("lbl"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new.alias("a")
-            .join(comp.alias("b"), "node")
-            .filter(F.col("a.lbl") != F.col("b.lbl"))
-            .limit(1)
-            .count()
-        )
-        comp = new
-        if changed == 0:
-            break
-    if changed != 0:
-        raise KqlLimitError(
-            "graph-mark-components kind=strong: directed min-propagation "
-            f"did not converge within {rounds} rounds (graph "
-            "diameter exceeds the distributed propagation bound; raise "
-            "KQL_ENGINE_GRAPH_PROPAGATION_ROUNDS or "
-            "KQL_ENGINE_GRAPH_LOCAL_ELEMS)"
-        )
-    return comp
+_GRAPH_PROPAGATION_ROUNDS = 64
+_GRAPH_LOCAL_ELEMS = 2_000_000
 
 
 def _scc_labels_local(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Exact SCC on a collected edge list via iterative Tarjan — the fast
-    path for graphs under KQL_ENGINE_GRAPH_LOCAL_ELEMS elements (the overwhelmingly
+    path for graphs under _GRAPH_LOCAL_ELEMS elements (the overwhelmingly
     common case: Kusto's make-graph is an in-memory construct). Component
     id = min node id in the SCC, matching the distributed path's
     contract. No diameter bound — a 2^20-node path or cycle is exact."""
@@ -4200,19 +4124,35 @@ def _scc_labels(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     All set algebra is keyed joins; the only driver data is a 1-row
     emptiness probe per round.
 
-    Round 10: graphs whose node+edge count fits KQL_ENGINE_GRAPH_LOCAL_ELEMS run
+    Round 10: graphs whose node+edge count fits _GRAPH_LOCAL_ELEMS run
     _scc_labels_local (exact Tarjan, no diameter bound) instead — see
     that docstring for why the bounded collect is faithful to Kusto's
     in-memory graph semantics. The distributed peeling below is the
-    >2M-element scale path."""
+    >2M-element scale path. Each direction's labels come from
+    extensions.llm._min_label_propagation over the directed edges; an
+    unconverged direction raises rather than peel partial labels."""
     from .errors import KqlLimitError
+    from .extensions.llm import _min_label_propagation
+
+    def reach_min(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+        rounds = _GRAPH_PROPAGATION_ROUNDS
+        labels, converged = _min_label_propagation(nodes, edges, rounds)
+        if not converged:
+            raise KqlLimitError(
+                "graph-mark-components kind=strong: directed min-propagation "
+                f"did not converge within {rounds} rounds (the graph "
+                "diameter exceeds the distributed propagation bound, and "
+                f"only graphs of at most {_GRAPH_LOCAL_ELEMS} nodes+edges "
+                "take the exact path)"
+            )
+        return labels
 
     edges = edges.localCheckpoint(eager=True)
     # single-job routing probe (round 11, ADVICE): limit(cap+1) over the
     # unioned 1-lit projections short-circuits once the cap is exceeded,
     # instead of two full count() jobs that large graphs paid just to
     # learn they take the distributed path
-    cap = _graph_local_elems()
+    cap = _GRAPH_LOCAL_ELEMS
     n_elems = (
         nodes.select(F.lit(1).alias("__e"))
         .unionAll(edges.select(F.lit(1).alias("__e")))
@@ -4231,14 +4171,14 @@ def _scc_labels(nodes: DataFrame, edges: DataFrame) -> DataFrame:
         sub = edges.join(
             remaining.withColumnRenamed("node", "src"), "src", "left_semi"
         ).join(remaining.withColumnRenamed("node", "dst"), "dst", "left_semi")
-        fwd = _directed_min_labels(remaining, sub)
-        bwd = _directed_min_labels(
+        fwd = reach_min(remaining, sub)
+        bwd = reach_min(
             remaining,
             sub.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
         )
         lab = (
-            fwd.withColumnRenamed("lbl", "__f")
-            .join(bwd.withColumnRenamed("lbl", "__b"), "node")
+            fwd.withColumnRenamed("comp", "__f")
+            .join(bwd.withColumnRenamed("comp", "__b"), "node")
             .filter(F.col("__f") == F.col("__b"))
             .select("node", F.col("__f").alias("comp"))
             .localCheckpoint(eager=True)
@@ -4318,10 +4258,9 @@ def _translate_pinning_small_plan(
     spark: SparkSession, q: Query, catalog: Catalog, options: dict | None
 ) -> DataFrame:
     tiny = src_names = None
-    if _SMALL_QUERY_BYTES > 0:
-        sized = _total_source_bytes(q, catalog)
-        if sized is not None:
-            tiny, src_names = sized
+    sized = _total_source_bytes(q, catalog)
+    if sized is not None:
+        tiny, src_names = sized
     if tiny is None or tiny >= _SMALL_QUERY_BYTES:
         return PipeTranslator(spark, catalog, options).translate_query(q)
     # single-task gate (round 17): every file source must be a single
@@ -4337,20 +4276,14 @@ def _translate_pinning_small_plan(
     # 600k raw rows and lose (q1 1.40x) — hence the byte gate. A
     # multi-row-group source (e.g. a CPU-heavy JSON scan at sf1) keeps
     # its parallel scan and the 4-partition pin below either way.
-    fuse = (
-        _os.environ.get("SPARK_GRAFT_SINGLE_TASK", "1") != "0"
-        and tiny <= _SINGLE_TASK_BYTES
-        and all(catalog.single_split(n) for n in src_names)
+    fuse = tiny <= _SINGLE_TASK_BYTES and all(
+        catalog.single_split(n) for n in src_names
     )
     # parse-spread gate (round 17, see _single_task_spread_point): only
     # when there is enough data for a per-row JSON parse to dominate the
     # fused single task — literal datatable/print queries (4KB nominal)
     # must not pay an extra exchange for a handful of rows
-    spread = (
-        fuse
-        and tiny >= _SPREAD_PARSE_MIN_BYTES
-        and _os.environ.get("SPARK_GRAFT_SPREAD_PARSE", "1") != "0"
-    )
+    spread = fuse and tiny >= _SPREAD_PARSE_MIN_BYTES
     # serialize the conf flip: session conf is process-global, so a
     # concurrent translation must not observe (or clobber) the temporary
     # small-plan settings

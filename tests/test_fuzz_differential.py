@@ -2784,10 +2784,52 @@ def test_scc_distributed_path_matches_local(run_kql, monkeypatch):
         " | sort by node_id asc"
     )
     local = [(r.node_id, r.comp) for r in run_kql(q).collect()]
-    monkeypatch.setenv("KQL_ENGINE_GRAPH_LOCAL_ELEMS", "0")
+    import kql_engine_spark.translator as TR
+
+    monkeypatch.setattr(TR, "_GRAPH_LOCAL_ELEMS", 0)
     dist = [(r.node_id, r.comp) for r in run_kql(q).collect()]
     assert local == dist == [
         (1, 1), (2, 1), (3, 1), (4, 4), (5, 4), (6, 4), (7, 7), (8, 8)]
+
+
+def test_weak_components_round_caps_typed_error(run_kql, monkeypatch):
+    # a chain longer than both round caps must fail loud with the typed
+    # limit error, never return under-merged components
+    import pytest
+
+    import kql_engine_spark.extensions.llm as llm
+    from kql_engine_spark.errors import KqlLimitError
+
+    monkeypatch.setattr(llm, "_GRAPH_LINEAR_ROUNDS", 1)
+    monkeypatch.setattr(llm, "_GRAPH_CC_ROUNDS", 1)
+    rows = _path_edges_kql(20, reverse_ids=True)
+    with pytest.raises(KqlLimitError, match="did not converge within 1 "):
+        run_kql(
+            f"datatable(src:long, dst:long)[{rows}]"
+            " | make-graph src --> dst"
+            " | graph-mark-components kind=weak with_component_id=comp"
+            " // weak-round-cap"
+        ).collect()
+
+
+def test_scc_propagation_round_cap_typed_error(run_kql, monkeypatch):
+    # on the distributed path (local cap 0) a directed path deeper than
+    # the propagation round cap must raise, not peel partial labels
+    import pytest
+
+    import kql_engine_spark.translator as TR
+    from kql_engine_spark.errors import KqlLimitError
+
+    monkeypatch.setattr(TR, "_GRAPH_LOCAL_ELEMS", 0)
+    monkeypatch.setattr(TR, "_GRAPH_PROPAGATION_ROUNDS", 1)
+    rows = _path_edges_kql(6)
+    with pytest.raises(KqlLimitError, match="did not converge within 1 "):
+        run_kql(
+            f"datatable(src:long, dst:long)[{rows}]"
+            " | make-graph src --> dst"
+            " | graph-mark-components kind=strong with_component_id=comp"
+            " // scc-round-cap"
+        ).collect()
 
 
 # ----------------- activity metrics cohort-dims differential fuzz (round 10)
@@ -2925,7 +2967,7 @@ def test_random_split_distinct_matches_fused(run_kql, monkeypatch, key, dcol, dc
     )
     monkeypatch.setattr(TR, "_SMALL_QUERY_BYTES", 0)
     split_rows = [tuple(r) for r in run_kql(q).collect()]
-    monkeypatch.setenv("KQL_ENGINE_SPLIT_DISTINCT", "0")
+    monkeypatch.setattr(TR, "_SPLIT_DISTINCT", False)
     fused_rows = [tuple(r) for r in run_kql(q + " // fused").collect()]
     assert split_rows == fused_rows
 

@@ -571,17 +571,19 @@ def test_decontaminate_corpus_sized_benchmark_warns(run_kql, monkeypatch):
 
     import pytest
 
+    import kql_engine_spark.extensions.llm as llm
     from kql_engine_spark.errors import KqlScaleWarning
 
     q = (
         "documents | evaluate decontaminate(text, doc_id, documents, text, 8)"
         " | summarize n = count()"
     )
-    monkeypatch.setenv("SPARK_GRAFT_DECON_BENCH_WARN_BYTES", "1")
+    default_bytes = llm._DECON_BENCH_WARN_BYTES
+    monkeypatch.setattr(llm, "_DECON_BENCH_WARN_BYTES", 1)
     with pytest.warns(KqlScaleWarning, match="dimension-sized eval set"):
         warned = run_kql(q + " // decon-warn").collect()[0].n
     # a dimension-sized benchmark (bound at its default) stays silent
-    monkeypatch.delenv("SPARK_GRAFT_DECON_BENCH_WARN_BYTES")
+    monkeypatch.setattr(llm, "_DECON_BENCH_WARN_BYTES", default_bytes)
     with warnings.catch_warnings():
         warnings.simplefilter("error", KqlScaleWarning)
         quiet = run_kql(q + " // decon-quiet").collect()[0].n
@@ -589,7 +591,7 @@ def test_decontaminate_corpus_sized_benchmark_warns(run_kql, monkeypatch):
     # a let-bound view SHADOWS the on-disk table of the same name: the
     # row proxy must describe the view (5 rows), not the footer of the
     # 500-row documents.parquet the name also matches
-    monkeypatch.setenv("SPARK_GRAFT_DECON_BENCH_WARN_ROWS", "100")
+    monkeypatch.setattr(llm, "_DECON_BENCH_WARN_ROWS", 100)
     with warnings.catch_warnings():
         warnings.simplefilter("error", KqlScaleWarning)
         run_kql(

@@ -5,6 +5,8 @@ posture, not just correctness."""
 
 from __future__ import annotations
 
+import sys
+
 
 def _plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
@@ -71,11 +73,13 @@ def test_two_phase_aggregation(run_kql, monkeypatch):
     # requirement; guide §2.4) while KEEPING the two-phase aggregate;
     # the cluster-regime shape (Exchange present) is pinned with the
     # fusion disabled.
+    import kql_engine_spark.translator as TR
+
     df = run_kql("lineitem | summarize s = sum(l_quantity) by l_returnflag")
     plan = _plan(df)
     assert plan.count("HashAggregate") >= 2
     assert "Exchange" not in plan  # fused: zero-shuffle single task
-    monkeypatch.setenv("SPARK_GRAFT_SINGLE_TASK", "0")
+    monkeypatch.setattr(TR, "_SINGLE_TASK_BYTES", -1)
     df = run_kql(
         "lineitem | summarize s = sum(l_quantity) by l_returnflag // unfused"
     )
@@ -645,11 +649,11 @@ def test_split_distinct_narrow_shuffles(run_kql, monkeypatch):
         )
 
 
-def test_split_distinct_disabled_by_env(run_kql, monkeypatch):
+def test_split_distinct_off_keeps_fused_plan(run_kql, monkeypatch):
     import kql_engine_spark.translator as TR
 
     monkeypatch.setattr(TR, "_SMALL_QUERY_BYTES", 0)
-    monkeypatch.setenv("KQL_ENGINE_SPLIT_DISTINCT", "0")
+    monkeypatch.setattr(TR, "_SPLIT_DISTINCT", False)
     df = run_kql(
         "lineitem | summarize c = count(), dc = dcount(l_orderkey)"
         " by l_returnflag // split-off"
@@ -658,7 +662,7 @@ def test_split_distinct_disabled_by_env(run_kql, monkeypatch):
     assert "Join" not in plan
 
 
-def test_runtime_bloom_filter_fires_on_smj_fact_scan(run_kql, spark):
+def test_runtime_bloom_filter_fires_on_smj_fact_scan(run_kql, spark, monkeypatch):
     # round 11: session re-gates Spark's runtime bloom-filter rule to this
     # engine's scale (100MB thresholds vs the 10GB/10MB defaults) so a
     # filtered dim side past the broadcast threshold blooms the fact scan
@@ -689,10 +693,10 @@ def test_runtime_bloom_filter_fires_on_smj_fact_scan(run_kql, spark):
         # and no single-task fusion (round 17) — a coalesced
         # single-partition join has no shuffle for the bloom to prune
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        import os
+        import kql_engine_spark.translator as TR
 
-        os.environ["KQL_ENGINE_AUTO_BROADCAST"] = "0"
-        os.environ["SPARK_GRAFT_SINGLE_TASK"] = "0"
+        monkeypatch.setattr(TR, "_AUTO_BROADCAST", False)
+        monkeypatch.setattr(TR, "_SINGLE_TASK_BYTES", -1)
         df = run_kql(
             "lineitem | join kind=inner (orders | where o_totalprice < 1000.0)"
             " on $left.l_orderkey == $right.o_orderkey"
@@ -701,8 +705,6 @@ def test_runtime_bloom_filter_fires_on_smj_fact_scan(run_kql, spark):
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         assert "might_contain" in plan, plan
     finally:
-        os.environ.pop("KQL_ENGINE_AUTO_BROADCAST", None)
-        os.environ.pop("SPARK_GRAFT_SINGLE_TASK", None)
         spark.conf.set(
             "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
             old_app,
@@ -965,6 +967,8 @@ def test_single_task_fused_small_plan(run_kql, spark, monkeypatch):
     # fusion disabled keeps the Exchange (the cluster shape), and both
     # arms return identical rows (the one real scan task already drove
     # every partial aggregate, so accumulation order is unchanged).
+    import kql_engine_spark.translator as TR
+
     q = (
         "events | where value > 0.0 "
         "| summarize n = count(), s = sum(value) by event_type "
@@ -975,7 +979,7 @@ def test_single_task_fused_small_plan(run_kql, spark, monkeypatch):
     assert "Exchange" not in plan
     assert "Coalesce" in plan
     assert plan.count("HashAggregate") >= 2  # two-phase agg preserved
-    monkeypatch.setenv("SPARK_GRAFT_SINGLE_TASK", "0")
+    monkeypatch.setattr(TR, "_SINGLE_TASK_BYTES", -1)
     unfused = run_kql(q + " // single-task-off")
     assert "Exchange" in _plan(unfused)
     assert [tuple(r) for r in fused.collect()] == [
@@ -1031,7 +1035,7 @@ def test_single_task_parse_spread(run_kql, spark, monkeypatch):
     spread = run_kql(q)
     plan = _plan(spread)
     assert "RoundRobinPartitioning" in plan
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_PARSE", "0")
+    monkeypatch.setattr(TR, "_SPREAD_PARSE_MIN_BYTES", sys.maxsize)
     fused = run_kql(q + " // spread-off")
     assert "Exchange" not in _plan(fused)
     assert [tuple(r) for r in spread.collect()] == [
@@ -1119,7 +1123,7 @@ def test_parse_spread_preserves_order_contracts(run_kql, spark, monkeypatch):
     assert "RoundRobinPartitioning" in _plan(df)
     # and the re-sorted arm returns the same rows in the same order as
     # the unspread arm
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_PARSE", "0")
+    monkeypatch.setattr(TR, "_SPREAD_PARSE_MIN_BYTES", sys.maxsize)
     df0 = run_kql(
         "events | sort by ts asc "
         "| extend k = extractjson('$.k', props) | project event_id, k "
@@ -1144,7 +1148,7 @@ def test_parse_spread_property_access(run_kql, spark, monkeypatch):
     )
     spread = run_kql(q)
     assert "RoundRobinPartitioning" in _plan(spread)
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_PARSE", "0")
+    monkeypatch.setattr(TR, "_SPREAD_PARSE_MIN_BYTES", sys.maxsize)
     fused = run_kql(q + " // prop-spread-off")
     assert "Exchange" not in _plan(fused)
     assert [tuple(r) for r in spread.collect()] == [

@@ -2097,7 +2097,7 @@ def test_split_distinct_mixed_families(run_kql, monkeypatch):
         " c = count() by l_returnflag"
     )
     got = {r.l_returnflag: tuple(r) for r in run_kql(q).collect()}
-    monkeypatch.setenv("KQL_ENGINE_SPLIT_DISTINCT", "0")
+    monkeypatch.setattr(TR, "_SPLIT_DISTINCT", False)
     want = {
         r.l_returnflag: tuple(r)
         for r in run_kql(q + " // fused-reference").collect()
@@ -2107,6 +2107,8 @@ def test_split_distinct_mixed_families(run_kql, monkeypatch):
 
 def test_auto_broadcast_result_parity(run_kql, monkeypatch):
     # the source-bytes hint must never change results, only plans
+    import kql_engine_spark.translator as TR
+
     q = (
         "customer | join kind=inner (orders) on $left.c_custkey == $right.o_custkey"
         " | join kind=inner (lineitem) on $left.o_orderkey == $right.l_orderkey"
@@ -2114,7 +2116,7 @@ def test_auto_broadcast_result_parity(run_kql, monkeypatch):
         " | sort by c_nationkey asc"
     )
     on = [tuple(r) for r in run_kql(q).collect()]
-    monkeypatch.setenv("KQL_ENGINE_AUTO_BROADCAST", "0")
+    monkeypatch.setattr(TR, "_AUTO_BROADCAST", False)
     off = [tuple(r) for r in run_kql(q + " // ab-off").collect()]
     assert on == off
 
@@ -2401,8 +2403,6 @@ def test_aqe_probe_result_parity_across_kinds(run_kql, spark, monkeypatch):
     # round 12: the rebalance probe must be semantics-free — identical
     # results probe-on vs probe-off across join kinds and filter
     # selectivities (including 0-survivor and all-survivor filters)
-    import os
-
     import kql_engine_spark.translator as TR
 
     monkeypatch.setattr(TR, "_SMALL_QUERY_BYTES", 0)
@@ -2423,14 +2423,13 @@ def test_aqe_probe_result_parity_across_kinds(run_kql, spark, monkeypatch):
                 f" k = count_distinct(o_orderkey)"
             )
             rows = {}
-            for mode in ("1", "0"):
-                os.environ["KQL_ENGINE_AQE_PROBE"] = mode
+            for mode in (True, False):
+                monkeypatch.setattr(TR, "_AQE_PROBE", mode)
                 rows[mode] = sorted(
-                    map(tuple, run_kql(q + f" // parity{i}m{mode}").collect())
+                    map(tuple, run_kql(q + f" // parity{i}m{int(mode)}").collect())
                 )
-            assert rows["1"] == rows["0"], (thr, kind)
+            assert rows[True] == rows[False], (thr, kind)
     finally:
-        os.environ.pop("KQL_ENGINE_AQE_PROBE", None)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
 
 

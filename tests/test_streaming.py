@@ -300,31 +300,29 @@ def test_stream_scan_state_stays_flat_on_never_completing_sequence():
     assert sizes[-1] - sizes[0] <= 16, sizes
 
 
-def test_stream_scan_state_cap_typed_error(spark):
+def test_stream_scan_state_cap_typed_error(spark, monkeypatch):
     # a declared variable accumulating per-row data in a never-completing
     # sequence is the one unbounded state vector; the byte cap must abort
-    # the query with the typed KqlLimitError, not grow without bound
-    import os
-
+    # the query with the typed KqlLimitError, not grow without bound.
+    # The cap is read on the driver when the UDF is built, so patching
+    # the module constant reaches the Python workers through the closure.
     import pytest
     from pyspark.errors import StreamingQueryException
 
+    import kql_engine_spark.scan as scan
     from kql_engine_spark.streaming import kql_stream, run_to_memory
 
-    os.environ["KQL_ENGINE_SCAN_MAX_STATE_BYTES"] = "2048"
-    try:
-        sdf = kql_stream(
-            spark,
-            "events | sort by event_id asc"
-            " | scan declare (acc:string = '') with ("
-            "    step s1: true => acc = strcat(s1.acc, 'xxxxxxxxxxxxxxxx');"
-            "    step s2: event_type == 'nosuch' => acc = acc;)",
-            sf_dir=SF_DIR,
-        )
-        with pytest.raises(StreamingQueryException, match="exceeds the 2048-byte cap"):
-            run_to_memory(sdf, "stream_scan_cap_t", mode="append")
-    finally:
-        del os.environ["KQL_ENGINE_SCAN_MAX_STATE_BYTES"]
+    monkeypatch.setattr(scan, "_SCAN_MAX_STATE_BYTES", 2048)
+    sdf = kql_stream(
+        spark,
+        "events | sort by event_id asc"
+        " | scan declare (acc:string = '') with ("
+        "    step s1: true => acc = strcat(s1.acc, 'xxxxxxxxxxxxxxxx');"
+        "    step s2: event_type == 'nosuch' => acc = acc;)",
+        sf_dir=SF_DIR,
+    )
+    with pytest.raises(StreamingQueryException, match="exceeds the 2048-byte cap"):
+        run_to_memory(sdf, "stream_scan_cap_t", mode="append")
 
 
 def test_streaming_eager_plugins_raise_typed_errors(spark):

@@ -30,6 +30,7 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+from kql_engine_spark import translator  # noqa: E402
 from kql_engine_spark.corpus import BENCH_QUERIES, CORPUS  # noqa: E402
 from kql_engine_spark.session import get_spark  # noqa: E402
 from kql_engine_spark.translator import kql  # noqa: E402
@@ -62,13 +63,15 @@ def dump(spark, sf_dir: str) -> dict[str, str]:
         for bench_id, name in BENCH_QUERIES.items()
     }
     plans["prop_json_extract"] = plan_of(kql(spark, PROP_VARIANT, sf_dir=sf_dir))
-    os.environ["SPARK_GRAFT_SPREAD_PARSE"] = "0"
+    # a byte floor no source reaches turns the parse spread off
+    floor = translator._SPREAD_PARSE_MIN_BYTES
+    translator._SPREAD_PARSE_MIN_BYTES = sys.maxsize
     try:
         plans["prop_json_extract_spreadoff"] = plan_of(
             kql(spark, PROP_VARIANT + " // spread-off", sf_dir=sf_dir)
         )
     finally:
-        del os.environ["SPARK_GRAFT_SPREAD_PARSE"]
+        translator._SPREAD_PARSE_MIN_BYTES = floor
     return plans
 
 
