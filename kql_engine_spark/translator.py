@@ -748,7 +748,6 @@ class PipeTranslator:
         streaming: bool = False,
         small_plan: bool = False,
         single_task: bool = False,
-        spread_parse: bool = False,
     ):
         self.spark = spark
         self.catalog = catalog
@@ -769,20 +768,6 @@ class PipeTranslator:
         # every partial aggregate), so results are bit-identical. Never
         # taken at scale: a real table has many row groups.
         self.single_task = single_task
-        # single-task parse spread (round 17): sources are big enough that
-        # an expensive per-row parse dominates the fused single task —
-        # translate_pipe may insert one spread repartition below the first
-        # JSON-parse op when the tail is provably partitioning-insensitive
-        # (_single_task_spread_point). Gated by the caller on source bytes
-        # (>= _SPREAD_PARSE_MIN_BYTES) so 3-row datatable queries never
-        # pay the extra exchange for a trivial parse.
-        self.spread_parse = spread_parse
-        # the query's TOP-LEVEL pipe (set by translate_query): the spread
-        # only ever fires there, because only there does the tail analysis
-        # see every op that runs above the repartition — a nested pipe
-        # (join side, tabular-in subquery, pipe-parenthesized source)
-        # cannot know whether the OUTER ops select rows plan-dependently
-        self._top_pipe = None
         # (sorted_df, source_df, cols) of the latest small-plan sort, so a
         # directly-following take can rebuild as TakeOrderedAndProject
         self._small_sorted: tuple | None = None
@@ -881,7 +866,6 @@ class PipeTranslator:
             isinstance(n, FuncCall) and n.name.lower() in _INGEST_META_FUNCS
             for n in _walk_ast(q)
         )
-        self._top_pipe = q.pipe
         df = self.translate_pipe(q.pipe)
         # engine-internal helper columns never escape to the user
         internal = [c for c in df.columns if c.startswith(("__row_order", "__kql"))]
@@ -920,39 +904,7 @@ class PipeTranslator:
         self.json_shared, self.pending_prework = {}, {}
         try:
             df = self.translate_source(pipe.source)
-            spread_at = None
-            if (
-                self.spread_parse
-                and not self.streaming
-                and pipe is self._top_pipe
-                # a 1-core session gains no parallelism from the spread
-                # and would still pay the exchange
-                and self.spark.sparkContext.defaultParallelism > 1
-            ):
-                # single-task parse spread (round 17): redistribute the
-                # compact rows across the cores right below the first
-                # expensive per-row parse, instead of serializing it on
-                # the one real scan task — only when the tail is provably
-                # partitioning-insensitive (see _single_task_spread_point).
-                # Round 18: the source schema lets string-backed property
-                # access (`props.k`, the same staged JSON parse) trigger
-                # too, while struct/map field access never does; a source
-                # that is not a plain physical scan / literal datatable
-                # may carry a hidden order contract and tightens the gate.
-                plain = isinstance(pipe.source, DataTable) or (
-                    isinstance(pipe.source, TableRef)
-                    and pipe.source.args is None
-                    and pipe.source.name not in self.lets
-                    and pipe.source.name not in self.named_results
-                )
-                spread_at = _single_task_spread_point(
-                    pipe.ops, dict(df.dtypes), plain
-                )
-            for i, op in enumerate(pipe.ops):
-                if i == spread_at:
-                    df = df.repartition(
-                        self.spark.sparkContext.defaultParallelism
-                    )
+            for op in pipe.ops:
                 df = self.translate_op(df, op)
             return df
         finally:
@@ -1543,9 +1495,7 @@ class PipeTranslator:
                     out.append((name, c))
                 continue
             col = tr.to_col(item.expr)
-            # naming rules live in _projected_name — the spread gate's
-            # rebinding trackers share the same copy
-            name, _same, auto_i = _projected_name(item, auto_i, auto_prefix)
+            name, auto_i = _projected_name(item, auto_i, auto_prefix)
             env[name] = col
             out.append((name, col))
         return out
@@ -2161,8 +2111,8 @@ class PipeTranslator:
         if self.streaming or side.isStreaming:
             return side
         # the REBALANCE hint is an AQE feature — without AQE the analyzer
-        # drops it as unrecognized and the boundary buys nothing (the
-        # small-plan pin translates with AQE off)
+        # drops it as unrecognized and the boundary buys nothing; a small
+        # plan's sides are below any size worth probing
         if self.small_plan or (
             self.spark.conf.get("spark.sql.adaptive.enabled", "true") != "true"
         ):
@@ -3624,16 +3574,18 @@ def _plan_is_volatile(q: Query) -> bool:
     return False
 
 
-# Small-input fast path: below this many on-disk source bytes, AQE's
-# stage-by-stage driver re-planning costs more than it can save (there is
-# nothing to adapt under one cluster-grade partition of data), so the plan
-# is pinned with AQE off. Conservative by construction: any source that is
-# not a sized parquet file (registered DataFrame, range, externaldata,
-# wildcard, all-tables search) disables the fast path, and at cluster scale
-# every real table clears the threshold so AQE always runs. 0 turns the
-# pin off.
-import threading as _threading
-
+# Small-plan gate: below this many on-disk source bytes a query's whole
+# input fits in a few tasks, so the translator makes plan-local choices
+# that trade parallelism for fewer stages — single-partition sorts (no
+# range-partitioner sampling job), no split-distinct rewrite, no AQE
+# probe (PipeTranslator.small_plan) — and, for single-row-group sources,
+# the single-task fusion below. Session conf is neither read nor written
+# here; with AQE on, Spark coalesces tiny shuffles at run time.
+# Conservative by construction: any source that is not a sized parquet
+# file (registered DataFrame, range, externaldata, wildcard, all-tables
+# search) or a row-expanding op keeps the scale path
+# (_total_source_bytes), and at cluster scale every real table clears the
+# threshold. 0 turns the gate off.
 _SMALL_QUERY_BYTES = 32 * 1024 * 1024
 
 # Single-task fused plans (round 17, guide §2.4): below this many on-disk
@@ -3645,317 +3597,31 @@ _SMALL_QUERY_BYTES = 32 * 1024 * 1024
 # fusion off.
 _SINGLE_TASK_BYTES = 8 * 1024 * 1024
 
-# Single-task parse spread (round 17, guide §2.5/§4 "per-task work"): a
-# fused single-task plan serializes EVERY per-row expression on the one
-# real scan task. For cheap expressions that is the point of the fusion —
-# but a JSON parse per row dominates the task (b7: the get_json_object
-# pass is ~90% of the fused query), so redistributing the compact
-# pre-parse rows across the cores wins back the whole core count for the
-# parse despite the extra exchange (measured interleaved on the bench VM:
-# b7 fused 0.31 s -> spread 0.21-0.22 s, identical results; the unfused
-# r16 plan also ran the parse inside the single scan task, so this beats
-# BOTH prior shapes). Applied only in single-task mode (i.e. tiny
-# single-row-group local inputs — a cluster-scale scan parallelizes by
-# itself and never enters this mode) and only when the pipe tail above
-# the parse is provably partitioning-insensitive (see
-# _single_task_spread_point). A byte floor of sys.maxsize below turns
-# the spread off.
-_EXPENSIVE_ROW_FNS = frozenset(
-    {"extractjson", "extract_json", "parse_json", "todynamic", "toobject"}
-)
-# below this many on-disk source bytes the parse is too small to be worth
-# one extra exchange (literal datatables report a 4KB nominal size). 128KB
-# keeps the sf0.01 correctness fixtures ABOVE the floor, so the driver's
-# oracle runs certify the exact spread plan the sf0.1 bench executes.
-_SPREAD_PARSE_MIN_BYTES = 128 * 1024
 # Plan rewrites that are on in every deployment. Tests turn one off to get
 # the unrewritten plan as a parity reference, so each is read at call time.
 _SPLIT_DISTINCT = True  # PipeTranslator._summarize_split
 _AQE_PROBE = True  # PipeTranslator._aqe_probe
 _AUTO_BROADCAST = True  # PipeTranslator._auto_broadcast
-# integral casts: sum()/sumif() over these is exact integer arithmetic,
-# so partial-aggregation grouping cannot change the result
-_INT_CAST_FNS = frozenset({"tolong", "toint"})
-# aggregates whose final value is independent of row order AND of the
-# partial-aggregation grouping: counts are integer sums; dcount is
-# HyperLogLog++ (per-register max — insertion order and merge grouping
-# cannot change the sketch); min/max are idempotent-commutative. sum/avg
-# are NOT here: double accumulation order changes the last ulp, and a
-# certified hash must not move — they are admitted only with a provably
-# integral argument (see _single_task_spread_point).
-_ORDER_FREE_AGGS = frozenset(
-    {"count", "countif", "dcount", "dcountif", "min", "max", "minif",
-     "maxif"}
-)
-# serialized-order row functions: their value is the physical row order,
-# which a spread repartition scrambles — any use above the spread point
-# disqualifies the spread
-_ORDER_SENSITIVE_FNS = frozenset(
-    {"row_number", "prev", "next", "row_cumsum", "row_rank_min",
-     "row_rank_dense", "row_window_session"}
-)
-# per-row nondeterministic functions (round 18, verdict nit): their values
-# are unspecified either way, so a spread would not be WRONG — but which
-# rows pair with which random draws becomes partition-dependent, and the
-# uniform rule (tail must be bit-reproducible across plan shapes) is worth
-# more than the exchange. Disqualify, same as the order-sensitive set.
-_SPREAD_NONDET_FNS = frozenset({"rand", "new_guid"})
-_SPREAD_TAIL_DISQUALIFIERS = _ORDER_SENSITIVE_FNS | _SPREAD_NONDET_FNS
 
 
 def _projected_name(item, auto_i: int, auto_prefix: str = "Column"):
-    """The output name a single-target Project/Extend NamedExpr binds,
-    under _named_items' exact naming rules (explicit name, bare-column
-    self-name, bin() source-column rebind, Column{n} auto-name) —
-    returns (name, value_preserving, auto_i). value_preserving is True
-    only for the bare `project x` form, which rebinds x to its own
-    unchanged value. This is THE single copy of the rule: _named_items
-    and both spread-gate trackers (trigger `assigned`, intcols) call it,
-    so the gate's rebinding model can never drift from the translator's
-    real naming (round 18 review)."""
+    """The output name a single-target Project/Extend NamedExpr binds
+    (explicit name, bare-column self-name, bin() source-column rebind,
+    Column{n} auto-name) — returns (name, auto_i)."""
     if item.name:
-        return item.name, False, auto_i
+        return item.name, auto_i
     if isinstance(item.expr, Col) and item.expr.side is None:
-        return item.expr.name, True, auto_i
+        return item.expr.name, auto_i
     if (
         isinstance(item.expr, FuncCall)
         and item.expr.name == "bin"
         and item.expr.args
         and isinstance(item.expr.args[0], Col)
     ):
-        return item.expr.args[0].name, False, auto_i
+        return item.expr.args[0].name, auto_i
     auto_i += 1
-    return f"{auto_prefix}{auto_i}", False, auto_i
+    return f"{auto_prefix}{auto_i}", auto_i
 
-
-def _walk_op_local(node):
-    """_walk_ast, but does NOT descend into nested Pipe/Query subtrees: an
-    expression inside a tabular subexpression (`in (T | ...)`,
-    `toscalar(...)`) is translated against its OWN DataFrame and never runs
-    in this pipe's row stream — a parse there must not select a spread
-    point here (round 18, ADVICE low: the spread would pay a useless
-    exchange for a parse that executes in a separate subquery)."""
-    import dataclasses
-
-    stack = [node]
-    while stack:
-        x = stack.pop()
-        if isinstance(x, (Pipe, Query)):
-            continue
-        if dataclasses.is_dataclass(x) and not isinstance(x, type):
-            yield x
-            for f in dataclasses.fields(x):
-                stack.append(getattr(x, f.name))
-        elif isinstance(x, (list, tuple)):
-            stack.extend(x)
-        elif isinstance(x, dict):
-            stack.extend(x.values())
-
-
-def _single_task_spread_point(
-    ops, source_dtypes=None, plain_source=False
-) -> int | None:
-    """Index of the first Where/Project/Extend op whose expressions do an
-    expensive per-row JSON parse — a call to the parse function family, or
-    (round 18) a property access `col.key` whose base is a string column
-    of the SOURCE schema, which stages the same get_json_object/from_json
-    work — or None when there is none, or when the pipe tail at/after
-    that op is not PROVABLY insensitive to the input partitioning, in
-    which case the spread must not fire (a repartition regroups partial
-    aggregates and re-orders float accumulation; only exact, order-free
-    tails are eligible).
-
-    `source_dtypes` is the source DataFrame's dict(df.dtypes): a Property
-    over a struct/map/array/variant column is a cheap native field access
-    that must NOT trigger a spread, so only bases that are provably
-    string-typed count — and only while no preceding op has rebound the
-    base name (assignments and renames are tracked; any op the tracker
-    does not model makes the schema untrustworthy and stops Property
-    triggering, while the FuncCall trigger is type-independent and keeps
-    working).
-
-    `plain_source` is True when the pipe's source is a physical table
-    scan or a literal datatable — sources with no row-order contract. A
-    PipeSource / let-bound view / stored function can contain an
-    order-establishing op this function cannot see (round 18, ADVICE
-    high), so a non-plain source is treated exactly like a Sort below the
-    spread point: the tail must discard row order or re-sort.
-
-    Ops BELOW the spread point are untouched — the repartition sits above
-    them, and the scan keeps its fused coalesce(1), so their behavior is
-    bit-identical to the certified single-task plan. Their OUTPUT ORDER,
-    however, does not survive the repartition: if an order-establishing
-    op (sort/serialize/top/...) sits at or below the spread point, its
-    ordering is a user-visible contract, and the spread is allowed only
-    when the tail discards row order anyway (an aggregation) or
-    re-establishes it (a final sort)."""
-    dtypes = dict(source_dtypes) if source_dtypes else {}
-    schema_known = bool(dtypes)
-    assigned: set[str] = set()
-
-    def _string_json_property(n) -> bool:
-        return (
-            isinstance(n, Property)
-            and isinstance(n.base, Col)
-            and n.base.side is None
-            and isinstance(n.key, Lit)
-            and n.key.ktype == "string"
-            and n.base.name not in assigned
-            and dtypes.get(n.base.name) == "string"
-        )
-
-    def _expensive(expr) -> bool:
-        for n in _walk_op_local(expr):
-            if isinstance(n, FuncCall) and n.name.lower() in _EXPENSIVE_ROW_FNS:
-                return True
-            if schema_known and _string_json_property(n):
-                return True
-        return False
-
-    idx = None
-    for i, op in enumerate(ops):
-        if isinstance(op, Where):
-            if _expensive(op.pred):
-                idx = i
-                break
-        elif isinstance(op, (Project, Extend)):
-            # item-by-item so KQL sequential visibility is modeled exactly:
-            # an item may rebind a name that a LATER item's property access
-            # reads (`extend props = 1, k = props.key` must not trigger)
-            hit = False
-            auto_i = 0
-            for item in op.items:
-                if _expensive(item.expr):
-                    hit = True
-                    break
-                if item.names:
-                    assigned.update(item.names)
-                    continue
-                name, same_value, auto_i = _projected_name(item, auto_i)
-                if not same_value:  # bare `project x` keeps x's dtype
-                    assigned.add(name)
-            if hit:
-                idx = i
-                break
-        elif isinstance(op, ProjectRename):
-            assigned.update(new for new, _old in op.pairs)
-        elif isinstance(op, (ProjectAway, ProjectKeep, ProjectReorder)):
-            pass  # column removal/reorder: remaining dtypes unchanged
-        else:
-            # join/summarize/mv-expand/...: columns may appear or change
-            # type in ways the tracker does not model — from here on only
-            # the type-independent FuncCall trigger may fire
-            schema_known = False
-    if idx is None:
-        return None
-
-    # order contract (see docstring): an order-establishing op at or
-    # below the spread point — or a source that could contain one
-    # (non-plain, round 18) — requires the tail to discard row order
-    # (Summarize/CountOp) or to re-sort as the final op
-    if not plain_source or any(
-        isinstance(op, (Sort, Serialize, Top, TopNested, TopHitters))
-        for op in ops[: idx + 1]
-    ):
-        tail = ops[idx + 1 :]
-        reorders = any(isinstance(op, (Summarize, CountOp)) for op in tail)
-        if not reorders and not (tail and isinstance(tail[-1], Sort)):
-            return None
-
-    # track which column names are provably integral (AST-level: defined
-    # by an integer cast, or by an exact-integer aggregate)
-    intcols: set[str] = set()
-
-    def is_int_expr(e) -> bool:
-        if isinstance(e, FuncCall) and e.name.lower() in _INT_CAST_FNS:
-            return True
-        return isinstance(e, Col) and e.side is None and e.name in intcols
-
-    def agg_safe(e) -> tuple[bool, bool]:
-        """(safe, result_is_integral) for one aggregate expression."""
-        if not isinstance(e, FuncCall):
-            return False, False
-        fn = e.name.lower()
-        if fn in ("count", "countif", "dcount", "dcountif"):
-            return True, True
-        if fn in _ORDER_FREE_AGGS:
-            return True, False
-        if fn in ("sum", "sumif") and e.args and is_int_expr(e.args[0]):
-            return True, True
-        return False, False
-
-    for j, op in enumerate(ops):
-        if isinstance(op, (Project, Extend)):
-            # exact rebinding model (round 18, ADVICE medium): every name
-            # this clause binds is either updated or discarded — including
-            # multi-name targets and auto-named items — so a stale intcols
-            # entry can never survive a rebind and misclassify a float sum
-            # as exact-integer
-            auto_i = 0
-            for item in op.items:
-                if item.names:
-                    for n in item.names:
-                        intcols.discard(n)
-                    continue
-                name, same_value, auto_i = _projected_name(item, auto_i)
-                if same_value:
-                    continue  # bare `project x`: value unchanged
-                if is_int_expr(item.expr):
-                    intcols.add(name)
-                else:
-                    intcols.discard(name)
-        elif isinstance(op, ProjectRename):
-            # remap per (new, old) pair; an intcol whose name collides
-            # with a rename TARGET without being renamed itself is
-            # shadowed — drop it (round 18, ADVICE medium)
-            renamed = {old: new for new, old in op.pairs}
-            targets = set(renamed.values())
-            intcols = {
-                renamed.get(c, c)
-                for c in intcols
-                if c in renamed or c not in targets
-            }
-        if j < idx:
-            continue
-        # j == idx falls through: the host op is Where/Project/Extend by
-        # construction and must itself pass the order-sensitivity check
-        # (it evaluates on post-repartition rows)
-        # tail op above the spread: must be row-wise, an exact order-free
-        # aggregation, or a final display sort (ordering among tied keys
-        # is unspecified in KQL and hashed order-insensitively). Serialized
-        # -order row functions (row_number/prev/...) read the physical row
-        # order the repartition would scramble — any use ANYWHERE in a
-        # tail op (projection, by-key, sort key) disqualifies; per-row
-        # nondeterministic functions (rand/new_guid) likewise (round 18).
-        if any(
-            isinstance(n, FuncCall)
-            and n.name.lower() in _SPREAD_TAIL_DISQUALIFIERS
-            for n in _walk_ast(op)
-        ):
-            return None
-        if isinstance(op, (Where, Project, Extend)):
-            continue
-        if isinstance(
-            op,
-            (ProjectAway, ProjectKeep, ProjectRename, ProjectReorder),
-        ):
-            continue
-        if isinstance(op, Sort) and j == len(ops) - 1:
-            continue
-        if isinstance(op, CountOp):
-            continue
-        if isinstance(op, Summarize):
-            new_int: set[str] = set()
-            for item in op.aggs:
-                ok, integral = agg_safe(item.expr)
-                if not ok:
-                    return None
-                if integral and item.name:
-                    new_int.add(item.name)
-            intcols = new_int
-            continue
-        return None
-    return idx
 
 # Operators whose output size is not bounded by their input's source
 # bytes (row expansion or arbitrary sub-pipelines): they reset the
@@ -3984,7 +3650,7 @@ _GROWTH_FNS = frozenset(
 )
 
 # Operators that can EXPAND row counts beyond any function of source
-# bytes — they disqualify the small-plan pin (_total_source_bytes).
+# bytes — they disqualify small-plan mode (_total_source_bytes).
 # Narrower than _SIZE_OPAQUE_OPS: make-series/facet/fork/union only
 # regroup or concatenate sized inputs, but these fan out per row
 # (mv-expand/mv-apply/plugins/graph patterns/scan step chains).
@@ -4013,7 +3679,6 @@ def _parse_size_bytes(s: str) -> int:
     if not m:
         return -1
     return int(m.group(1)) * _SIZE_SUFFIXES.get(m.group(2).lower(), 1)
-_SMALL_PLAN_LOCK = _threading.Lock()
 
 # variable-length graph-pattern cap (round 9: raised 8 -> 16 after the
 # incremental-frontier unroll made planning O(hi) joins instead of
@@ -4245,24 +3910,25 @@ def _total_source_bytes(
         elif type(node).__name__ in _ROW_EXPANDING_OPS:
             # on-disk bytes are the wrong size signal once the pipeline
             # fans rows out: sf10 documents is a 4.5MB file (compressed
-            # word soup) that explodes into 26M n-grams — pinning the
-            # 4-partition small plan put that fan-out on 4 reducers
-            # (engine 18.8s vs 6.8s with the normal plan, round 11).
+            # word soup) that explodes into 26M n-grams — the round-11
+            # small plan (then 4 shuffle partitions) put that fan-out on
+            # 4 reducers (engine 18.8s vs 6.8s with the normal plan), and
+            # single-task fusion would put it on one.
             # Never claim small for expanding queries; the latency cost
             # for genuinely tiny ones is a few extra scheduling ms.
             return None
     return total, names
 
 
-def _translate_pinning_small_plan(
+def _translate_size_gated(
     spark: SparkSession, q: Query, catalog: Catalog, options: dict | None
 ) -> DataFrame:
-    tiny = src_names = None
+    """Translate q, in small-plan mode when its sources are sized and
+    total under _SMALL_QUERY_BYTES (see PipeTranslator.__init__)."""
     sized = _total_source_bytes(q, catalog)
-    if sized is not None:
-        tiny, src_names = sized
-    if tiny is None or tiny >= _SMALL_QUERY_BYTES:
+    if sized is None or sized[0] >= _SMALL_QUERY_BYTES:
         return PipeTranslator(spark, catalog, options).translate_query(q)
+    tiny, src_names = sized
     # single-task gate (round 17): every file source must be a single
     # parquet row group — then no split size can parallelize any scan and
     # the fused zero-Exchange plan gives up nothing (see PipeTranslator
@@ -4275,40 +3941,13 @@ def _translate_pinning_small_plan(
     # 0.78x, has-scan 0.80x); the 11MB lineitem aggs pay the boundary on
     # 600k raw rows and lose (q1 1.40x) — hence the byte gate. A
     # multi-row-group source (e.g. a CPU-heavy JSON scan at sf1) keeps
-    # its parallel scan and the 4-partition pin below either way.
+    # its parallel scan either way.
     fuse = tiny <= _SINGLE_TASK_BYTES and all(
         catalog.single_split(n) for n in src_names
     )
-    # parse-spread gate (round 17, see _single_task_spread_point): only
-    # when there is enough data for a per-row JSON parse to dominate the
-    # fused single task — literal datatable/print queries (4KB nominal)
-    # must not pay an extra exchange for a handful of rows
-    spread = fuse and tiny >= _SPREAD_PARSE_MIN_BYTES
-    # serialize the conf flip: session conf is process-global, so a
-    # concurrent translation must not observe (or clobber) the temporary
-    # small-plan settings
-    with _SMALL_PLAN_LOCK:
-        prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        if prev == "false":
-            return PipeTranslator(spark, catalog, options).translate_query(q)
-        prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions", "200")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        # few shuffle partitions replace AQE's runtime coalesce: scheduling
-        # 32 near-empty reduce tasks costs more than the parallelism
-        # returns on <32MB of input
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
-            out = PipeTranslator(
-                spark, catalog, options, small_plan=True, single_task=fuse,
-                spread_parse=spread,
-            ).translate_query(q)
-            # force physical planning NOW so the non-AQE choice is captured
-            # in the QueryExecution this DataFrame will execute with
-            out._jdf.queryExecution().executedPlan()
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", prev)
-            spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-    return out
+    return PipeTranslator(
+        spark, catalog, options, small_plan=True, single_task=fuse
+    ).translate_query(q)
 
 
 def kql(
@@ -4335,7 +3974,7 @@ def kql(
             per_session[key] = catalog
     try:
         q = parse(text)
-        out = _translate_pinning_small_plan(spark, q, catalog, options)
+        out = _translate_size_gated(spark, q, catalog, options)
     except RecursionError:
         # mirror Kusto's query-complexity cap with a typed error instead of
         # leaking the interpreter's RecursionError

@@ -1,12 +1,12 @@
 """Concurrent queries on one session give the results of serial runs.
 
-One SparkSession serves every caller, so translation state, the plan and
-catalog caches and the small-plan conf flip are shared between threads.
+One SparkSession serves every caller, so translation state and the plan
+and catalog caches are shared between threads.
 Eight Python threads each run kql() then toPandas() over a fixed mix of
 corpus entries:
 - small-plan entries (sized sources under the small-query threshold);
 - a join over sized sf0.001 tables;
-- a row-expanding entry, which translates outside the small-plan lock;
+- a row-expanding entry, which never takes the small-plan path;
 - an LLM text operator, whose narrow-scan spread reads the split conf.
 
 Every result must equal the entry's serial result under the conftest

@@ -5,8 +5,6 @@ posture, not just correctness."""
 
 from __future__ import annotations
 
-import sys
-
 
 def _plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
@@ -307,18 +305,9 @@ def test_notin_tabular_lowered_to_anti_join(run_kql):
     assert "LeftAnti" in plan
 
 
-def test_small_input_fast_path_pins_non_aqe_plan(run_kql, spark):
-    # tiny parquet inputs skip AQE (its stage-wise re-planning dominates
-    # under 32MB) and pin a small shuffle-partition count; session conf is
-    # untouched afterwards
-    df = run_kql("events | summarize c = count() by event_type")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "AdaptiveSparkPlan" not in plan
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-
-
 def test_unknown_input_size_keeps_aqe(spark):
-    # a registered DataFrame has no file size -> conservative: AQE stays on
+    # a registered DataFrame has no file size -> conservative: the scale
+    # path, with no single-task Coalesce 1 fusion
     from kql_engine_spark.catalog import Catalog
     from kql_engine_spark.translator import kql
 
@@ -327,6 +316,7 @@ def test_unknown_input_size_keeps_aqe(spark):
     df = kql(spark, "mem_table | summarize n = count() by x", catalog=cat)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "AdaptiveSparkPlan" in plan
+    assert "Coalesce 1" not in plan
 
 
 def test_range_source_keeps_aqe(run_kql):
@@ -334,6 +324,7 @@ def test_range_source_keeps_aqe(run_kql):
     df = run_kql("range x from 1 to 1000 step 1 | summarize s = sum(x) by b = x % 7")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "AdaptiveSparkPlan" in plan
+    assert "Coalesce 1" not in plan
 
 
 def test_geo_polygon_lookup_broadcasts_and_defers_udf(run_kql):
@@ -715,8 +706,8 @@ def test_runtime_bloom_filter_fires_on_smj_fact_scan(run_kql, spark, monkeypatch
 def test_aqe_probe_rebalances_filtered_agg_join_side(run_kql, spark, monkeypatch):
     import kql_engine_spark.translator as TR
 
-    # the probe is an AQE feature; the small-plan pin translates with AQE
-    # off, so lift it for fixture-sized sources
+    # small-plan mode skips the probe, so lift the gate for fixture-sized
+    # sources
     monkeypatch.setattr(TR, "_SMALL_QUERY_BYTES", 0)
     # round 12: a join side shaped `summarize ... by k | where pred` has a
     # runtime size no static estimate can see. When neither side earns a
@@ -873,6 +864,56 @@ def test_kql_and_actions_leave_session_conf_unchanged(spark, tmp_path):
     unchanged("a kql() that raises")
 
 
+def test_kql_never_writes_session_conf(spark, tmp_path, monkeypatch):
+    # no query path sets or unsets a session conf key, not even
+    # temporarily: a fused small query, a sized small query that is not
+    # fused (several row groups), an unsized source and a JSON parse, each
+    # through kql() and an action
+    import pandas as pd
+    from pyspark.sql.conf import RuntimeConfig
+
+    from kql_engine_spark.catalog import Catalog
+    from kql_engine_spark.corpus import CORPUS
+    from kql_engine_spark.translator import kql
+    from tests.conftest import SF_DIR
+
+    # the catalog's one-time nanosAsLong write on the first bind of a
+    # timestamp[ns] table is a separate matter: bind events before recording
+    kql(spark, "events | take 1", sf_dir=SF_DIR).collect()
+    calls = []
+    real_set, real_unset = RuntimeConfig.set, RuntimeConfig.unset
+
+    def rec_set(self, key, value):
+        calls.append(("set", key, value))
+        return real_set(self, key, value)
+
+    def rec_unset(self, key):
+        calls.append(("unset", key))
+        return real_unset(self, key)
+
+    monkeypatch.setattr(RuntimeConfig, "set", rec_set)
+    monkeypatch.setattr(RuntimeConfig, "unset", rec_unset)
+
+    pd.DataFrame({"a": range(1000)}).to_parquet(
+        tmp_path / "rg10.parquet", row_group_size=100
+    )
+    cat = Catalog(spark, str(tmp_path))
+    assert cat.single_split("rg10") is False
+    fused = kql(spark, "events | summarize n = count() by event_type\n// conf-fused",
+                sf_dir=SF_DIR)
+    assert "Coalesce 1" in fused._jdf.queryExecution().executedPlan().toString()
+    fused.collect()
+    not_fused = kql(spark, "rg10 | summarize s = sum(a) by b = a % 7", catalog=cat)
+    assert "Coalesce 1" not in not_fused._jdf.queryExecution().executedPlan().toString()
+    assert len(not_fused.toPandas()) == 7
+    unsized = kql(spark, "range x from 1 to 50 step 1 | summarize s = sum(x)\n"
+                  "// conf-unsized", sf_dir=SF_DIR)
+    assert unsized.collect()[0][0] == 1275
+    parse = kql(spark, CORPUS["extractjson_props"][0] + "\n// conf-parse", sf_dir=SF_DIR)
+    parse.toPandas()
+    assert calls == []
+
+
 def test_multi_row_group_small_file_scans_on_every_core(spark, tmp_path):
     # a small file with several row groups must scan on every core without
     # any per-query conf change: the session's split rule (8MB splits,
@@ -989,7 +1030,7 @@ def test_single_task_fused_small_plan(run_kql, spark, monkeypatch):
 
 def test_single_task_skips_oversized_and_multi_row_group(run_kql, spark, tmp_path):
     # the byte gate: a query whose sources exceed one scan split keeps
-    # the 4-partition small-plan pin (codegen fusion of scan+partial-agg
+    # its shuffles (codegen fusion of scan+partial-agg
     # beats the removed stage once real row volume crosses the Coalesce
     # boundary — measured q1 1.40x, BASELINE.md round 17) — and a
     # multi-row-group source must never fuse (its scan CAN parallelize).
@@ -1016,157 +1057,29 @@ def test_single_task_skips_oversized_and_multi_row_group(run_kql, spark, tmp_pat
     assert cat.single_split("events") is False  # not in this base_dir
 
 
-def test_single_task_parse_spread(run_kql, spark, monkeypatch):
-    # Round 17 (guide §2.5/§4 "per-task work"): a fused single-task plan
-    # serializes a per-row JSON parse on the one real scan task; when the
-    # tail above the parse is provably partitioning-insensitive the
-    # translator spreads the compact rows across the cores below the
-    # parse (measured interleaved at sf0.1: b7 0.31 s -> 0.21 s).
-    # Pinned from both ends: the spread plan carries the RoundRobin
-    # exchange, the flag-off arm keeps the fused zero-Exchange shape,
-    # and both return identical rows.
-    import kql_engine_spark.translator as TR
-
-    monkeypatch.setattr(TR, "_SPREAD_PARSE_MIN_BYTES", 0)
-    q = (
-        "events | project event_id, k = tolong(extractjson('$.k', props)) "
-        "| summarize s = sum(k), n = count()"
-    )
-    spread = run_kql(q)
-    plan = _plan(spread)
-    assert "RoundRobinPartitioning" in plan
-    monkeypatch.setattr(TR, "_SPREAD_PARSE_MIN_BYTES", sys.maxsize)
-    fused = run_kql(q + " // spread-off")
-    assert "Exchange" not in _plan(fused)
-    assert [tuple(r) for r in spread.collect()] == [
-        tuple(r) for r in fused.collect()
-    ]
-
-
-def test_parse_spread_skips_unsafe_tails(run_kql, spark, monkeypatch):
-    # the spread must NOT fire when the tail above the parse could change
-    # under a repartition: float-sum aggregates (double accumulation
-    # order), serialized-order row functions, row-selecting ops, nested
-    # pipes under an outer tail, or sources below the byte floor.
-    import kql_engine_spark.translator as TR
-
-    monkeypatch.setattr(TR, "_SPREAD_PARSE_MIN_BYTES", 0)
-    # float sum: not provably exact -> stay fused
-    df = run_kql(
-        "events | extend k = extractjson('$.k', props) "
-        "| summarize s = sum(value) // spread-floatsum"
-    )
-    assert "RoundRobinPartitioning" not in _plan(df)
-    # serialized-order row function above the parse -> stay fused
-    df = run_kql(
-        "events | sort by event_id asc "
-        "| extend k = extractjson('$.k', props), r = row_number() "
-        "// spread-rowfn"
-    )
-    assert "RoundRobinPartitioning" not in _plan(df)
-    # row-selecting tail -> stay fused
-    df = run_kql(
-        "events | extend k = extractjson('$.k', props) | take 5 "
-        "// spread-take"
-    )
-    assert "RoundRobinPartitioning" not in _plan(df)
-    # nested pipe source with an outer row-selecting tail: the inner pipe
-    # must not spread either (only the top-level pipe is analyzed)
-    df = run_kql(
-        "(events | project event_id, k = tolong(extractjson('$.k', props)) "
-        "| summarize s = sum(k) by event_id) | take 5 // spread-nested"
-    )
-    assert "RoundRobinPartitioning" not in _plan(df)
-    # integral sum through a projected cast IS safe -> spreads (control)
-    df = run_kql(
-        "events | project k = tolong(extractjson('$.k', props)) "
-        "| summarize s = sum(k) // spread-control"
-    )
-    assert "RoundRobinPartitioning" in _plan(df)
-    # byte floor: the default gate keeps tiny fixtures fused
-    monkeypatch.setattr(TR, "_SPREAD_PARSE_MIN_BYTES", 1 << 40)
-    df = run_kql(
-        "events | project k = tolong(extractjson('$.k', props)) "
-        "| summarize s = sum(k) // spread-floor"
-    )
-    assert "RoundRobinPartitioning" not in _plan(df)
-
-
-def test_parse_spread_preserves_order_contracts(run_kql, spark, monkeypatch):
-    # an order-establishing op at/below the spread point is a
-    # user-visible ordering contract the repartition would scramble:
-    # the spread must fire only when the tail discards row order (an
-    # aggregation) or re-establishes it (a final sort).
-    import kql_engine_spark.translator as TR
-
-    monkeypatch.setattr(TR, "_SPREAD_PARSE_MIN_BYTES", 0)
-    # sort below the parse, row-wise tail -> ordered output, NO spread
-    df = run_kql(
-        "events | sort by ts asc "
-        "| extend k = extractjson('$.k', props) | project event_id, k "
-        "// spread-order1"
-    )
-    assert "RoundRobinPartitioning" not in _plan(df)
-    # sort below, but the tail aggregates (order discarded) -> spread OK
-    df = run_kql(
-        "events | sort by ts asc "
-        "| extend k = tolong(extractjson('$.k', props)) "
-        "| summarize s = sum(k) // spread-order2"
-    )
-    assert "RoundRobinPartitioning" in _plan(df)
-    # sort below, but a FINAL sort re-establishes order -> spread OK
-    df = run_kql(
-        "events | sort by ts asc "
-        "| extend k = extractjson('$.k', props) | project event_id, k "
-        "| sort by event_id asc // spread-order3"
-    )
-    assert "RoundRobinPartitioning" in _plan(df)
-    # and the re-sorted arm returns the same rows in the same order as
-    # the unspread arm
-    monkeypatch.setattr(TR, "_SPREAD_PARSE_MIN_BYTES", sys.maxsize)
-    df0 = run_kql(
-        "events | sort by ts asc "
-        "| extend k = extractjson('$.k', props) | project event_id, k "
-        "| sort by event_id asc // spread-order3-off"
-    )
-    assert [tuple(r) for r in df.collect()] == [
-        tuple(r) for r in df0.collect()
-    ]
-
-
-def test_parse_spread_property_access(run_kql, spark, monkeypatch):
-    # Round 18 (verdict item 1): `props.k` over a STRING column stages the
-    # same per-row JSON parse as extractjson (via the __kqlseg_json
-    # prework), so it must trigger the spread too — and return rows
-    # identical to the fused flag-off plan.
-    import kql_engine_spark.translator as TR
-
-    monkeypatch.setattr(TR, "_SPREAD_PARSE_MIN_BYTES", 0)
-    q = (
-        "events | project event_id, k = tolong(props.k) "
-        "| summarize s = sum(k), n = count()"
-    )
-    spread = run_kql(q)
-    assert "RoundRobinPartitioning" in _plan(spread)
-    monkeypatch.setattr(TR, "_SPREAD_PARSE_MIN_BYTES", sys.maxsize)
-    fused = run_kql(q + " // prop-spread-off")
-    assert "Exchange" not in _plan(fused)
-    assert [tuple(r) for r in spread.collect()] == [
-        tuple(r) for r in fused.collect()
-    ]
-
-
-def test_parse_spread_property_struct_refusal(spark, tmp_path, monkeypatch):
-    # Round 18: a Property over a real STRUCT column is a cheap native
-    # field access — it must NOT pay a spread exchange. Same catalog, same
-    # tail: the string-JSON twin spreads (control), the struct one never.
+def test_json_parse_results_and_order_contracts(run_kql, spark, duck, tmp_path):
+    # a per-row JSON parse gives the same rows whether it is written as
+    # extractjson or as property access on a string column, and a parse
+    # keeps the row order a sort below it (also one hidden in a pipe
+    # source or a let-bound view) or a final sort above it establishes
     import pandas as pd
 
-    import kql_engine_spark.translator as TR
     from kql_engine_spark.catalog import Catalog
     from kql_engine_spark.translator import kql
 
-    monkeypatch.setattr(TR, "_SPREAD_PARSE_MIN_BYTES", 0)
+    want = duck.sql(
+        "SELECT CAST(SUM(CAST(props ->> '$.k' AS BIGINT)) AS BIGINT), COUNT(*)"
+        " FROM events"
+    ).fetchall()
+    for q in (
+        "events | project event_id, k = tolong(extractjson('$.k', props)) "
+        "| summarize s = sum(k), n = count()",
+        "events | project event_id, k = tolong(props.k) "
+        "| summarize s = sum(k), n = count()",
+    ):
+        assert [tuple(r) for r in run_kql(q).collect()] == want, q
+
+    # struct field access and the JSON parse of its string twin agree
     n = 500
     pd.DataFrame(
         {
@@ -1175,138 +1088,27 @@ def test_parse_spread_property_struct_refusal(spark, tmp_path, monkeypatch):
         }
     ).to_parquet(tmp_path / "structtab.parquet")
     cat = Catalog(spark, str(tmp_path))
-    struct_df = kql(
-        spark,
-        "structtab | project x = tolong(props.k) | summarize s = sum(x)",
-        catalog=cat,
-    )
-    assert "RoundRobinPartitioning" not in _plan(struct_df)
-    string_df = kql(
-        spark,
-        "structtab | project x = tolong(js.k) | summarize s = sum(x)",
-        catalog=cat,
-    )
-    assert "RoundRobinPartitioning" in _plan(string_df)
-    # both compute the same sum (field access vs JSON parse of the twin)
-    assert [tuple(r) for r in struct_df.collect()] == [
-        tuple(r) for r in string_df.collect()
+    sums = [
+        kql(spark, f"structtab | project x = tolong({c}.k) | summarize s = sum(x)",
+            catalog=cat).collect()[0][0]
+        for c in ("props", "js")
     ]
+    assert sums == [n * (n - 1) // 2] * 2
 
+    def column(q, c):
+        return [r[c] for r in run_kql(q).collect()]
 
-def test_parse_spread_property_rebind_refusal(run_kql, spark, monkeypatch):
-    # Round 18: once a preceding op (or an earlier item of the same
-    # clause — KQL sequential visibility) rebinds the base name, the
-    # source schema no longer describes it and the Property trigger must
-    # not fire.
-    import kql_engine_spark.translator as TR
-
-    monkeypatch.setattr(TR, "_SPREAD_PARSE_MIN_BYTES", 0)
-    # rebound by a preceding extend
-    df = run_kql(
-        "events | extend props = strcat('{\"k\":', tostring(event_id), '}') "
-        "| project k = tolong(props.k) | summarize s = sum(k) "
-        "// prop-rebind1"
+    for src in ("events | sort by ts asc", "(events | sort by ts asc)",
+                "let V = events | sort by ts asc; V"):
+        ts = column(
+            f"{src} | extend k = extractjson('$.k', props) "
+            "| project ts, event_id, k",
+            "ts",
+        )
+        assert ts == sorted(ts) and len(ts) > 1, src
+    ids = column(
+        "events | sort by ts asc | extend k = extractjson('$.k', props) "
+        "| project event_id, k | sort by event_id asc",
+        "event_id",
     )
-    assert "RoundRobinPartitioning" not in _plan(df)
-    # rebound by an earlier item of the SAME clause
-    df = run_kql(
-        "events | extend props = 1, k = tolong(props.k) "
-        "| summarize s = sum(k) // prop-rebind2"
-    )
-    assert "RoundRobinPartitioning" not in _plan(df)
-
-
-def test_parse_spread_hidden_source_order_refusal(run_kql, spark, monkeypatch):
-    # Round 18 (ADVICE high): a sort inside a PipeSource or let-bound view
-    # is invisible to the op-list scan, so a non-plain source must be
-    # treated like a Sort below the spread point — row-wise tails refuse,
-    # order-discarding tails still spread.
-    import kql_engine_spark.translator as TR
-
-    monkeypatch.setattr(TR, "_SPREAD_PARSE_MIN_BYTES", 0)
-    df = run_kql(
-        "(events | sort by ts asc) "
-        "| extend k = extractjson('$.k', props) | project event_id, k "
-        "// hidden-order-pipesource"
-    )
-    assert "RoundRobinPartitioning" not in _plan(df)
-    df = run_kql(
-        "let V = events | sort by ts asc; V "
-        "| extend k = extractjson('$.k', props) | project event_id, k "
-        "// hidden-order-letview"
-    )
-    assert "RoundRobinPartitioning" not in _plan(df)
-    # control: the tail discards row order -> the hidden sort cannot leak
-    df = run_kql(
-        "(events | sort by ts asc) "
-        "| extend k = tolong(extractjson('$.k', props)) "
-        "| summarize s = sum(k) // hidden-order-agg"
-    )
-    assert "RoundRobinPartitioning" in _plan(df)
-
-
-def test_parse_spread_nested_subquery_no_useless_exchange(
-    run_kql, spark, monkeypatch
-):
-    # Round 18 (ADVICE low): a parse inside a nested tabular subexpression
-    # of a top-level op executes in its own separately-translated
-    # subquery — it must not select a spread point in THIS pipe (the
-    # exchange would be pure overhead).
-    import kql_engine_spark.translator as TR
-
-    monkeypatch.setattr(TR, "_SPREAD_PARSE_MIN_BYTES", 0)
-    df = run_kql(
-        "events | where event_type in (events "
-        "| project t = substring(extractjson('$.k', props), 0, 1)) "
-        "| summarize n = count() // nested-subquery-parse"
-    )
-    assert "RoundRobinPartitioning" not in _plan(df)
-
-
-def test_parse_spread_nondeterministic_tail_refusal(run_kql, spark, monkeypatch):
-    # Round 18 (verdict nit): rand()/new_guid() in the tail make which row
-    # pairs with which draw partition-dependent — refuse, same as the
-    # order-sensitive row functions.
-    import kql_engine_spark.translator as TR
-
-    monkeypatch.setattr(TR, "_SPREAD_PARSE_MIN_BYTES", 0)
-    df = run_kql(
-        "events | extend k = tolong(extractjson('$.k', props)), r = rand() "
-        "| summarize s = sum(k), n = count() // nondet-rand"
-    )
-    assert "RoundRobinPartitioning" not in _plan(df)
-    df = run_kql(
-        "events | extend k = tolong(extractjson('$.k', props)) "
-        "| extend g = new_guid() | summarize s = sum(k), n = count() "
-        "// nondet-guid"
-    )
-    assert "RoundRobinPartitioning" not in _plan(df)
-
-
-def test_parse_spread_intcols_rename_soundness(run_kql, spark, monkeypatch):
-    # Round 18 (ADVICE medium): integral tracking must survive renames —
-    # 'project-rename kk=k | project-rename k=value | summarize sum(k)'
-    # sums DOUBLES and must refuse; summing the renamed integral column
-    # is still exact and still spreads.
-    import kql_engine_spark.translator as TR
-
-    monkeypatch.setattr(TR, "_SPREAD_PARSE_MIN_BYTES", 0)
-    df = run_kql(
-        "events | extend k = tolong(extractjson('$.k', props)) "
-        "| project-rename kk = k | project-rename k = value "
-        "| summarize s = sum(k) // rename-floatsum"
-    )
-    assert "RoundRobinPartitioning" not in _plan(df)
-    df = run_kql(
-        "events | extend k = tolong(extractjson('$.k', props)) "
-        "| project-rename kk = k | summarize s = sum(kk) "
-        "// rename-intsum"
-    )
-    assert "RoundRobinPartitioning" in _plan(df)
-    # multi-name assignment rebinding the integral column -> refuse
-    df = run_kql(
-        "events | extend k = tolong(extractjson('$.k', props)) "
-        "| extend (k, mx) = series_stats(pack_array(value, value)) "
-        "| summarize s = sum(k), n = count() // multiname-floatsum"
-    )
-    assert "RoundRobinPartitioning" not in _plan(df)
+    assert ids == sorted(ids)

@@ -1,22 +1,20 @@
-"""Dump .explain('formatted') for the 12 bench queries plus the
-property-access spread variant, and optionally compare with an earlier dump.
+"""Dump .explain('formatted') for the 12 bench queries plus a
+property-access JSON variant, and optionally compare with an earlier dump.
 
 Usage:
   python tools/dump_plans.py OUT_DIR [--suffix S] [--sf-dir DIR] [--compare DIR]
 
 Writes OUT_DIR/<id>[_S].txt for each bench query (planned exactly as
-bench.py plans it) and for the property variant twice: with the parse
-spread on (`prop_json_extract`) and off (`prop_json_extract_spreadoff`).
-The data directory is --sf-dir, else $SPARK_GRAFT_SF_DIR; the committed
-dumps under plans/ were taken at sf0.1.
+bench.py plans it) and for the property variant (`prop_json_extract`).
+The data directory is --sf-dir, else $SPARK_GRAFT_SF_DIR. The session is
+always built at 32 cores, so shuffle widths in the dumps do not depend on
+the host. The reference dumps are plans/current/, taken at sf0.1:
+`python tools/dump_plans.py OUT --sf-dir <sf0.1 dir> --compare plans/current`.
 
 --compare DIR checks every file just written against the same-named file
 in DIR after normalizing what differs between sessions but not between
 plans: expression ids (`#123`), `plan_id`s and the directory part of scan
-locations. It prints a diff per differing plan and exits 1 if any differs,
-e.g. `python tools/dump_plans.py /tmp/p --suffix after --compare plans/r18`.
-The parse spread repartitions to the core count, so compare dumps taken
-at the same SPARK_GRAFT_CPUS (the plans/r18 dumps were taken at 32).
+locations. It prints a diff per differing plan and exits 1 if any differs.
 """
 
 from __future__ import annotations
@@ -30,7 +28,6 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-from kql_engine_spark import translator  # noqa: E402
 from kql_engine_spark.corpus import BENCH_QUERIES, CORPUS  # noqa: E402
 from kql_engine_spark.session import get_spark  # noqa: E402
 from kql_engine_spark.translator import kql  # noqa: E402
@@ -39,6 +36,8 @@ PROP_VARIANT = (
     "events | project event_id, k = tolong(props.k) "
     "| summarize s = sum(k), n = count()"
 )
+# get_spark sizes the local master and the shuffle width from this
+CORES = "32"
 _EXPR_ID = re.compile(r"#\d+")
 _PLAN_ID = re.compile(r"plan_id=\d+")
 _LOCATION = re.compile(r"(\[|, )file:[^\],]*/")
@@ -63,15 +62,6 @@ def dump(spark, sf_dir: str) -> dict[str, str]:
         for bench_id, name in BENCH_QUERIES.items()
     }
     plans["prop_json_extract"] = plan_of(kql(spark, PROP_VARIANT, sf_dir=sf_dir))
-    # a byte floor no source reaches turns the parse spread off
-    floor = translator._SPREAD_PARSE_MIN_BYTES
-    translator._SPREAD_PARSE_MIN_BYTES = sys.maxsize
-    try:
-        plans["prop_json_extract_spreadoff"] = plan_of(
-            kql(spark, PROP_VARIANT + " // spread-off", sf_dir=sf_dir)
-        )
-    finally:
-        translator._SPREAD_PARSE_MIN_BYTES = floor
     return plans
 
 
@@ -109,6 +99,7 @@ def main() -> int:
     if not args.sf_dir:
         ap.error("give --sf-dir or set SPARK_GRAFT_SF_DIR")
     os.makedirs(args.out_dir, exist_ok=True)
+    os.environ["SPARK_GRAFT_CPUS"] = CORES
     spark = get_spark("plan-dump")
     try:
         plans = dump(spark, args.sf_dir)
