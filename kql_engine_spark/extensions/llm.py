@@ -35,7 +35,6 @@ from pyspark.sql.window import Window
 
 import os
 import weakref
-from urllib.parse import unquote, urlparse
 
 from ..ast_nodes import Col, Lit, TypedLit, UnaryOp
 from ..errors import KqlSemanticError, KqlUnsupportedError
@@ -103,104 +102,18 @@ _WIDTH_SET_RE = _re.compile(
 )
 
 
-# in-memory relation nodes whose RDD probe is trivially cheap: python
-# createDataFrame rows arrive as a pre-existing LogicalRDD, scala-side
-# literals as LocalRelation/OneRowRelation. JDBC and other remote
-# file-less relations match none of these.
-_LOCAL_REL_RE = _re.compile(
-    r"(?m)^[\s+:|-]*(?:LocalRelation|OneRowRelation|LogicalRDD)\b"
-)
-
-# cached inputs (round 15, ADVICE): a df.cache()'d file scan reports
-# inputFiles() == [] like a JDBC relation, but its ANALYZED plan still
-# shows the original file Relation — the InMemoryRelation substitution
-# happens post-analysis (withCachedData), so it needs its own probe
-# there. The partition probe is cheap on a materialized cache (the
-# cached RDD already knows its partition count), and without it a
-# cached narrow corpus silently lost the narrow-scan spread.
-_CACHED_REL_RE = _re.compile(r"(?m)^[\s+:|-]*InMemoryRelation\b")
-
-
-def _est_scan_tasks(df: DataFrame, logical: str | None = None) -> int | None:
-    """Expected file-scan task count, mirroring Spark's FilePartition
-    bin-packing (maxSplitBytes = min(maxPartitionBytes, max(openCost,
-    padded/parallelism))), computed from driver-side file stats and the
-    session's own split conf, which is what the scan will use (the engine
-    never changes it per query). Round
-    12 (ADVICE): replaces df.rdd.getNumPartitions(), which forced full
-    physical-plan + RDD-lineage compilation on every text-plugin
-    translation and read a pre-AQE count. File-less IN-MEMORY sources
-    fall back to that old probe — cheap on LocalRelation plans, and
-    gated on the analyzed plan actually BEING one (round 14 ADVICE:
-    JDBC and other non-file relations also report empty inputFiles(),
-    and the probe would recompile a remote scan that is already wide).
-    `logical` is the caller's already-computed analyzed-plan string.
-    None = a remote/object-store/non-file scan (a real cluster scan is
-    already wide; caller skips the spread)."""
-    try:
-        files = df.inputFiles()
-    except Exception:  # pragma: no cover - defensive
-        return None
-    if not files:
-        # in-memory source (datatable / createDataFrame): nothing to
-        # stat, but the old partition-count probe is cheap here (a
-        # LocalRelation plan compiles trivially) and without it narrow
-        # in-memory corpora silently lose the spread (round 13 ADVICE)
-        if logical is None:
-            try:
-                logical = df._jdf.queryExecution().analyzed().toString()  # noqa: SLF001
-            except Exception:  # pragma: no cover - defensive
-                return None
-        if not _LOCAL_REL_RE.search(logical):
-            # cached file scans also land here (empty inputFiles); the
-            # cache substitution is post-analysis, so check the
-            # withCachedData plan before giving up (round 15, ADVICE)
-            try:
-                cached = (
-                    df._jdf.queryExecution().withCachedData().toString()  # noqa: SLF001
-                )
-            except Exception:  # pragma: no cover - defensive
-                return None
-            if not _CACHED_REL_RE.search(cached):
-                return None
-        try:
-            return df.rdd.getNumPartitions()
-        except Exception:  # pragma: no cover - defensive
-            return None
-    total = 0
-    for uri in files:
-        p = urlparse(uri)
-        if p.scheme not in ("", "file"):
-            # remote object store: a real cluster scan is already wide
-            return None
-        try:
-            total += os.path.getsize(unquote(p.path))
-        except OSError:
-            return None
-    spark = df.sparkSession
-    ju = spark._jvm.org.apache.spark.network.util.JavaUtils
-    max_pb = int(ju.byteStringAsBytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB")))
-    open_cost = int(ju.byteStringAsBytes(
-        spark.conf.get("spark.sql.files.openCostInBytes", "4MB")))
-    par = max(spark.sparkContext.defaultParallelism, 1)
-    padded = total + len(files) * open_cost
-    max_split = min(max_pb, max(open_cost, padded // par))
-    return -(-padded // max(max_split, 1))
-
-
 def _spread_narrow_scan(df: DataFrame) -> DataFrame:
     """Text corpora compress hard, so a big corpus can scan as 1-4 tasks
-    (sf10 documents: 500k docs / 27M words from a 4.5MB file) — and every
-    per-row fan-out (explode) or heavy per-row kernel (minhash UDF,
-    repetition metrics) downstream inherits that parallelism. When the
-    expected scan width is below the core count, redistribute the
-    compact pre-fan-out rows. At cluster scale a real corpus scans as
-    thousands of tasks and this is a no-op (round 11; ngram_stats
-    measured 300s -> 4.5s at sf10 together with the token-CSE fix).
-    Round 12: the width probe is a driver-side file-stat estimate (see
-    _est_scan_tasks) applied only to narrow chains over a file scan —
-    post-shuffle inputs already carry the exchange width."""
+    (sf10 documents: 500k docs / 27M words from a 4.5MB file; a
+    single-row-group file is read by ONE task however many splits Spark
+    cuts) — and every per-row fan-out (explode) or heavy per-row kernel
+    (minhash UDF, repetition metrics) downstream inherits that
+    parallelism. Redistribute the compact pre-fan-out rows over every
+    core unless the input already passed through an exchange, whose
+    width is the shuffle width. No scan-width guess: an already-wide scan
+    pays one round-robin exchange of the compact rows (no measurable cost
+    on 4 cores; unmeasured at cluster scale). Streaming input is returned
+    unchanged."""
     if df.isStreaming:
         return df
     try:
@@ -209,11 +122,7 @@ def _spread_narrow_scan(df: DataFrame) -> DataFrame:
         logical = ""
     if _WIDTH_SET_RE.search(logical):
         return df
-    est = _est_scan_tasks(df, logical or None)
-    sc = df.sparkSession.sparkContext
-    if est is not None and est < sc.defaultParallelism:
-        return df.repartition(sc.defaultParallelism)
-    return df
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 class _PlanKey:
@@ -808,11 +717,10 @@ def _ngram_stats(ptr, df: DataFrame, args) -> DataFrame:
     # the wrong granularity for everything downstream: a heavily-
     # compressed text file scans as 1-4 tasks (sf10 documents: 27M words
     # from a 4.5MB file) and tokenize + fan-out + partial count all land
-    # on them. When scan parallelism is below the core count,
-    # redistribute the RAW text rows BEFORE tokenizing — the shuffle
-    # moves the smallest representation and spreads the tokenize CPU
-    # too. At cluster scale a real corpus scans as thousands of tasks
-    # and this branch never fires.
+    # on them. Redistribute the RAW text rows BEFORE tokenizing — the
+    # shuffle moves the smallest representation and spreads the tokenize
+    # CPU too. An already-wide scan (a cluster-scale corpus) pays this
+    # one round-robin exchange of the raw rows as well (unmeasured).
     src = _spread_narrow_scan(df.select(F.col(text).alias("__ng_text")))
     work = src.select(_tokens(F.col("__ng_text")).alias("__ng_toks"))
     # start indices 0..len-n; the when-guard keeps sequence() from seeing
@@ -4876,8 +4784,9 @@ def _decontaminate(ptr, df: DataFrame, args) -> DataFrame:
         # 90 of its 94 s running the bench kernel on 2 of 32 cores. Spread
         # the narrow projection before the kernel, exactly like the fact
         # side; for a genuinely dimension-sized eval set the repartition
-        # moves kilobytes and at cluster scale _spread_narrow_scan no-ops
-        # on width.
+        # moves kilobytes, and an already-wide benchmark scan pays one
+        # round-robin exchange of its text rows (unmeasured at cluster
+        # scale).
         bench_hashes = (
             _spread_narrow_scan(bench.select(F.col(btext).alias("__bt")))
             .select(F.explode(ngram_hashes(F.col("__bt"))).alias("__bh"))

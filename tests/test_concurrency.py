@@ -7,7 +7,8 @@ corpus entries:
 - small-plan entries (sized sources under the small-query threshold);
 - a join over sized sf0.001 tables;
 - a row-expanding entry, which never takes the small-plan path;
-- an LLM text operator, whose narrow-scan spread reads the split conf.
+- an LLM text operator, whose narrow-scan spread adds a round-robin
+  exchange to its input.
 
 Every result must equal the entry's serial result under the conftest
 comparator.

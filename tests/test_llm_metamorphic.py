@@ -1084,37 +1084,49 @@ def test_ann_index_queries_are_not_plan_cached(spark, tmp_path):
     assert kql(spark, sess, sf_dir=SF_DIR) is kql(spark, sess, sf_dir=SF_DIR)
 
 
-def test_est_scan_tasks_probe(spark, run_kql):
-    # round 12: the narrow-scan width probe is a driver-side file-stat
-    # estimate (no physical-plan/RDD compilation). A compact fixture file
-    # must estimate below the core count (so the spread fires). Round 13
-    # (ADVICE): file-less in-memory sources fall back to the cheap
-    # partition-count probe instead of None, so narrow datatable corpora
-    # keep the spread.
-    from kql_engine_spark.extensions.llm import _est_scan_tasks
-    from tests.conftest import SF_DIR
+def test_spread_narrow_scan_fires_on_every_exchange_free_input(spark, tmp_path):
+    # a single-row-group parquet file is read by ONE task however many
+    # splits Spark cuts, so a file-size estimate of the scan width cannot
+    # tell when to spread: every batch input without an exchange gets
+    # one round-robin exchange to the core count, post-exchange input
+    # keeps its shuffle width
+    import base64
+    import os
+    import re
 
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    est = _est_scan_tasks(docs)
-    assert est is not None and 1 <= est < spark.sparkContext.defaultParallelism
-    local = spark.createDataFrame([(1, "x")], "id long, text string")
-    est_local = _est_scan_tasks(local)
-    assert est_local is not None and est_local >= 1
-    # round 14 (ADVICE): the fallback fires ONLY for LocalRelation plans —
-    # other file-less relations (JDBC, Range, ...) must return None, not
-    # recompile a remote scan that is already wide
-    assert _est_scan_tasks(spark.range(5)) is None
-    # round 15 (ADVICE): a CACHED file scan reports inputFiles()==[] and
-    # its analyzed plan still shows the file relation (the
-    # InMemoryRelation substitution is post-analysis) — the probe must
-    # find it in withCachedData, not return None and lose the spread
-    cached = spark.read.parquet(f"{SF_DIR}/documents.parquet").cache()
-    try:
-        cached.count()  # materialize so the probe sees the cache
-        est_cached = _est_scan_tasks(cached.select("doc_id", "text"))
-        assert est_cached is not None and est_cached >= 1
-    finally:
-        cached.unpersist()
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kql_engine_spark.catalog import Catalog
+    from kql_engine_spark.extensions.llm import _spread_narrow_scan
+
+    par = spark.sparkContext.defaultParallelism
+    rng = np.random.default_rng(11)
+    rows = (par + 1) * 1024 + 64  # 1 KiB of random text per row, stored raw
+    text = [base64.b64encode(rng.bytes(768)).decode() for _ in range(rows)]
+    path = str(tmp_path / "corpus.parquet")
+    pq.write_table(
+        pa.table({"doc_id": np.arange(rows, dtype=np.int64), "text": text}),
+        path, row_group_size=rows, compression="none", use_dictionary=False,
+    )
+    assert pq.ParquetFile(path).metadata.num_row_groups == 1
+    assert os.path.getsize(path) >= (par + 1) << 20
+
+    def exchanges(df):
+        plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+            df._jdf.queryExecution(), "formatted"
+        )
+        return re.findall(r"\(\d+\) Exchange\n(?:[^\n]+\n)*?Arguments: (\w+\(\d+\))", plan)
+
+    spread = [f"RoundRobinPartitioning({par})"]
+    scan = Catalog(spark, str(tmp_path)).table("corpus")  # what evaluate sees
+    assert exchanges(scan) == []
+    assert exchanges(_spread_narrow_scan(scan)) == spread
+    agg = scan.groupBy("doc_id").count()  # `summarize count() by doc_id`
+    assert _spread_narrow_scan(agg) is agg
+    local = spark.createDataFrame([(1, "x")], "doc_id long, text string")
+    assert exchanges(_spread_narrow_scan(local)) == spread
 
 
 def test_width_set_re_round13_classes(spark):

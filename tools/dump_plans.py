@@ -1,11 +1,14 @@
 """Dump .explain('formatted') for the 12 bench queries plus a
-property-access JSON variant, and optionally compare with an earlier dump.
+property-access JSON variant and an LLM text-plugin query, and optionally
+compare with an earlier dump.
 
 Usage:
   python tools/dump_plans.py OUT_DIR [--suffix S] [--sf-dir DIR] [--compare DIR]
 
 Writes OUT_DIR/<id>[_S].txt for each bench query (planned exactly as
-bench.py plans it) and for the property variant (`prop_json_extract`).
+bench.py plans it), for the property variant (`prop_json_extract`) and for
+`quality_filter` over documents (`llm_quality_filter`), whose plan carries
+the plugins' narrow-scan spread.
 The data directory is --sf-dir, else $SPARK_GRAFT_SF_DIR. The session is
 always built at 32 cores, so shuffle widths in the dumps do not depend on
 the host. The reference dumps are plans/current/, taken at sf0.1:
@@ -36,6 +39,7 @@ PROP_VARIANT = (
     "events | project event_id, k = tolong(props.k) "
     "| summarize s = sum(k), n = count()"
 )
+LLM_VARIANT = "documents | evaluate quality_filter(text, 5)"
 # get_spark sizes the local master and the shuffle width from this
 CORES = "32"
 _EXPR_ID = re.compile(r"#\d+")
@@ -62,6 +66,7 @@ def dump(spark, sf_dir: str) -> dict[str, str]:
         for bench_id, name in BENCH_QUERIES.items()
     }
     plans["prop_json_extract"] = plan_of(kql(spark, PROP_VARIANT, sf_dir=sf_dir))
+    plans["llm_quality_filter"] = plan_of(kql(spark, LLM_VARIANT, sf_dir=sf_dir))
     return plans
 
 
