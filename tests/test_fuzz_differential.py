@@ -10,6 +10,7 @@ artifact.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -3397,19 +3398,23 @@ def test_ann_index_update_full_probe_equals_brute(
     assert got == brute
 
 
-def _brute_cross_jaccard_survivors(new_rows, ref_rows, thr):
-    """Exact token-3-shingle jaccard brute force (string shingles — the
-    engine hashes them, identical up to negligible 64-bit collisions)."""
-    def shingles(s):
-        toks = [t for t in (s or " ").lower().split() if t]
-        if len(toks) >= 3:
-            return {"\x1f".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
-        return {"\x1f".join(toks)}
+def _token3_shingles(s):
+    """The minhash dedup family's unit as string shingles: lowercased
+    whitespace tokens, distinct 3-token windows, the whole token list for
+    shorter docs (the empty list for null/blank text). The engine hashes
+    them — identical up to negligible 64-bit collisions."""
+    toks = [t for t in (s or " ").lower().split() if t]
+    if len(toks) >= 3:
+        return {"\x1f".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
+    return {"\x1f".join(toks)}
 
-    refs = [shingles(t) for _, t in ref_rows]
+
+def _brute_cross_jaccard_survivors(new_rows, ref_rows, thr):
+    """Exact token-3-shingle jaccard brute force."""
+    refs = [_token3_shingles(t) for _, t in ref_rows]
     out = []
     for i, t in new_rows:
-        g = shingles(t)
+        g = _token3_shingles(t)
         hit = any(
             len(g & r) / len(g | r) >= thr if g | r else True for r in refs
         )
@@ -3486,6 +3491,92 @@ def test_dedup_against_equals_brute_force(
         ).collect()
     )
     assert via_idx == want
+
+
+def _char_grams(s, n):
+    """dedup_jaccard's unit as strings: distinct n-character windows of
+    the trimmed text, the whole text when it is shorter than n."""
+    s = s.strip()
+    return {s[i : i + n] for i in range(len(s) - n + 1)} if len(s) >= n else {s}
+
+
+def _brute_min_id_canonicals(docs, grams_of, thr):
+    """Exact all-pairs Jaccard >= thr edges, union-find components, the
+    min id of each component — the self-dedup contract, no banding."""
+    root = {i: i for i, _ in docs}
+
+    def find(x):
+        while root[x] != x:
+            root[x] = root[root[x]]
+            x = root[x]
+        return x
+
+    grams = [(i, grams_of(t)) for i, t in docs]
+    for a, (ia, ga) in enumerate(grams):
+        for ib, gb in grams[a + 1 :]:
+            if len(ga & gb) / len(ga | gb) >= thr:
+                ra, rb = find(ia), find(ib)
+                root[max(ra, rb)] = min(ra, rb)
+    return sorted(i for i, _ in docs if find(i) == i)
+
+
+@pytest.mark.parametrize(
+    "seed,thr,n", [(1, 0.8, 5), (2, 0.6, 5), (3, 0.7, 3), (4, 0.9, 4)]
+)
+def test_self_dedup_equals_brute_force(spark, seed, thr, n):
+    # dedup_near and `dedup_clusters | where is_canonical` keep exactly
+    # the min-id canonicals of the exact all-pairs token-3-shingle
+    # Jaccard components, and dedup_jaccard those of the char-n-gram
+    # components plus every blank doc, on seeded corpora with planted
+    # exact copies, case-changed copies and one-word edits
+    import random
+
+    from kql_engine_spark.catalog import Catalog
+    from kql_engine_spark.translator import kql
+
+    rng = random.Random(seed)
+    vocab = [
+        "alpha", "bravo", "charlie", "delta", "echo", "fox",
+        "golf", "hotel", "india", "juliet", "kilo", "lima",
+    ]
+    docs = []
+    for i in range(40):
+        r = rng.random()
+        if r < 0.15 and docs:  # planted exact copy
+            docs.append((i, rng.choice(docs)[1]))
+        elif r < 0.25 and docs:  # case-changed copy: equal only as tokens
+            docs.append((i, (rng.choice(docs)[1] or "").upper()))
+        elif r < 0.55 and docs:  # planted one-word edit
+            toks = (rng.choice(docs)[1] or "").split()
+            if toks:
+                toks[rng.randrange(len(toks))] = rng.choice(vocab)
+            docs.append((i, " ".join(toks)))
+        elif r < 0.6:  # blank text: one token-shingle group, kept by jaccard
+            docs.append((i, rng.choice([None, "", "  "])))
+        else:
+            docs.append(
+                (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(1, 40))))
+            )
+    rng.shuffle(docs)
+    near_want = _brute_min_id_canonicals(docs, _token3_shingles, thr)
+    nonblank = [(i, t) for i, t in docs if (t or "").strip()]
+    jac_want = sorted(
+        _brute_min_id_canonicals(nonblank, lambda t: _char_grams(t, n), 0.8)
+        + [i for i, t in docs if not (t or "").strip()]
+    )
+
+    cat = Catalog(spark)
+    cat.register("sdd", spark.createDataFrame(docs, "doc_id long, text string"))
+
+    def ids(q):
+        return sorted(r.doc_id for r in kql(spark, q, catalog=cat).collect())
+
+    assert ids(f"sdd | evaluate dedup_near(text, doc_id, {thr})") == near_want
+    assert ids(
+        f"sdd | evaluate dedup_clusters(text, doc_id, {thr})"
+        " | where is_canonical"
+    ) == near_want
+    assert ids(f"sdd | evaluate dedup_jaccard(text, doc_id, 0.8, {n})") == jac_want
 
 
 @settings(
