@@ -1,14 +1,16 @@
 """Dump .explain('formatted') for the 12 bench queries plus a
-property-access JSON variant and an LLM text-plugin query, and optionally
-compare with an earlier dump.
+property-access JSON variant and two LLM text-plugin queries, and
+optionally compare with an earlier dump.
 
 Usage:
   python tools/dump_plans.py OUT_DIR [--suffix S] [--sf-dir DIR] [--compare DIR]
 
 Writes OUT_DIR/<id>[_S].txt for each bench query (planned exactly as
-bench.py plans it), for the property variant (`prop_json_extract`) and for
+bench.py plans it), for the property variant (`prop_json_extract`), for
 `quality_filter` over documents (`llm_quality_filter`), whose plan carries
-the plugins' narrow-scan spread.
+the plugins' narrow-scan spread, and for `dedup_clusters` over documents
+(`llm_dedup_clusters`), whose plan reads the minhash pipeline's
+checkpointed frames.
 The data directory is --sf-dir, else $SPARK_GRAFT_SF_DIR. The session is
 always built at 32 cores, so shuffle widths in the dumps do not depend on
 the host. The reference dumps are plans/current/, taken at sf0.1:
@@ -16,7 +18,8 @@ the host. The reference dumps are plans/current/, taken at sf0.1:
 
 --compare DIR checks every file just written against the same-named file
 in DIR after normalizing what differs between sessions but not between
-plans: expression ids (`#123`), `plan_id`s and the directory part of scan
+plans: expression ids (`#123`), `plan_id`s, RDD ids (`MapPartitionsRDD[11]
+at localCheckpoint`, in checkpoint scans) and the directory part of scan
 locations. It prints a diff per differing plan and exits 1 if any differs.
 """
 
@@ -40,10 +43,12 @@ PROP_VARIANT = (
     "| summarize s = sum(k), n = count()"
 )
 LLM_VARIANT = "documents | evaluate quality_filter(text, 5)"
+DEDUP_VARIANT = "documents | evaluate dedup_clusters(text, doc_id, 0.8)"
 # get_spark sizes the local master and the shuffle width from this
 CORES = "32"
 _EXPR_ID = re.compile(r"#\d+")
 _PLAN_ID = re.compile(r"plan_id=\d+")
+_RDD_ID = re.compile(r"RDD\[\d+\]")
 _LOCATION = re.compile(r"(\[|, )file:[^\],]*/")
 
 
@@ -56,6 +61,7 @@ def plan_of(df) -> str:
 def normalize(plan: str) -> str:
     plan = _EXPR_ID.sub("#N", plan)
     plan = _PLAN_ID.sub("plan_id=N", plan)
+    plan = _RDD_ID.sub("RDD[N]", plan)
     return _LOCATION.sub(r"\1", plan)
 
 
@@ -67,6 +73,7 @@ def dump(spark, sf_dir: str) -> dict[str, str]:
     }
     plans["prop_json_extract"] = plan_of(kql(spark, PROP_VARIANT, sf_dir=sf_dir))
     plans["llm_quality_filter"] = plan_of(kql(spark, LLM_VARIANT, sf_dir=sf_dir))
+    plans["llm_dedup_clusters"] = plan_of(kql(spark, DEDUP_VARIANT, sf_dir=sf_dir))
     return plans
 
 
