@@ -2520,6 +2520,24 @@ def _cosine_lsh_work(feat: DataFrame, thr: float) -> DataFrame:
     )
 
 
+def _band_pairs(work: DataFrame) -> DataFrame:
+    """Candidate pairs of an LSH band table (__id, __bands): (src, dst)
+    with src < dst for every two rows that share a value in the same
+    band. Band rows carry ONLY (id, band, value) — the join keys the
+    shuffle bucket-locally, never all-pairs, and callers fetch their
+    payload (gram hashes, unit vectors) back for the tiny candidate
+    fraction with two id-joins instead of exploding it through the
+    self-join."""
+    banded = work.select("__id", F.posexplode(F.col("__bands")).alias("b", "v"))
+    return (
+        banded.alias("l")
+        .join(banded.alias("r"), ["b", "v"])
+        .filter(F.col("l.__id") < F.col("r.__id"))
+        .select(F.col("l.__id").alias("src"), F.col("r.__id").alias("dst"))
+        .distinct()
+    )
+
+
 def _cosine_lsh_pairs(feat: DataFrame, thr: float, work: DataFrame = None) -> DataFrame:
     """Candidate cosine pairs over unit vectors: sign-random-projection
     banding (threshold-adaptive shape; P(bit match) = 1 - theta/pi) keys a
@@ -2532,14 +2550,7 @@ def _cosine_lsh_pairs(feat: DataFrame, thr: float, work: DataFrame = None) -> Da
     caller's own downstream uses."""
     if work is None:
         work = _cosine_lsh_work(feat, thr)
-    banded = work.select("__id", F.posexplode(F.col("__bands")).alias("b", "v"))
-    cand = (
-        banded.alias("l")
-        .join(banded.alias("r"), ["b", "v"])
-        .filter(F.col("l.__id") < F.col("r.__id"))
-        .select(F.col("l.__id").alias("src"), F.col("r.__id").alias("dst"))
-        .distinct()
-    )
+    cand = _band_pairs(work)
     ul = work.select(F.col("__id").alias("src"), F.col("__u").alias("__ul"))
     ur = work.select(F.col("__id").alias("dst"), F.col("__u").alias("__ur"))
     dot = F.aggregate(
@@ -2725,31 +2736,64 @@ def _minhash_shape(thr: float) -> tuple[int, int]:
     return (30, 2) if thr < 0.7 else (20, 4)
 
 
-def _minhash_load_index(
-    df: DataFrame, idc: str, textc: str, path: str, what: str,
-    n_bands: int | None = None, rows_per_band: int | None = None,
-    ngram_n: int | None = None,
-):
-    """Load a minhash_index_build signature table -> (sigs DataFrame,
-    meta row). Typed errors on band-shape mismatch (signatures computed
-    for a different banding cannot serve this threshold; checked when
-    the caller needs bands), on a missing/mismatched decontaminate
-    n-gram column (checked when the caller needs __ngh), on a mismatched
-    shingle width (signatures hashed with a different shingle_k cannot
-    serve today's kernel — round 14, forward-compat for a future
-    parameterized kernel), on a torn/in-progress store (marker +
-    row-count checks, store write-safety block comment), and on
-    staleness vs the current corpus (default O(id column + file
-    metadata); see the guard block comment)."""
-    spark = df.sparkSession
+def _minhash_sigs(
+    df: DataFrame, idc: str, text: str, n_bands: int, rows_per_band: int,
+    extra_n: int | None = None,
+) -> DataFrame:
+    """The minhash family's signature pass: (__id, __gh, __bands[,
+    __ngh]) per input row, from one Arrow-batched numpy pass over the
+    narrow (id, text) scan (mode='token' of the vectorized kernel
+    dedup_jaccard uses). __gh is the distinct 3-token-shingle hashes,
+    __bands the minhash band values, __ngh (with extra_n) decontaminate's
+    extra_n-token n-gram hashes rolled in the SAME pass. Docs with no
+    tokens hash to the empty shingle, so identical empty/null texts
+    still merge. Lazy: each caller checkpoints or writes it."""
+    feat = _jaccard_feature_udf(
+        3, n_bands, rows_per_band, mode="token", extra_n=extra_n
+    )
+    cols = [
+        "__id",
+        F.col("__f.gh").alias("__gh"),
+        F.col("__f.bands").alias("__bands"),
+    ]
+    if extra_n is not None:
+        cols.append(F.col("__f.ngh").alias("__ngh"))
+    return (
+        _spread_narrow_scan(
+            df.select(F.col(idc).alias("__id"), F.col(text).cast("string").alias("__s"))
+        )
+        .withColumn("__f", feat(F.coalesce(F.col("__s"), F.lit(" "))))
+        .select(*cols)
+    )
+
+
+def _minhash_read_meta(spark, path: str, what: str):
+    """The meta row of a minhash_index_build store, after the
+    in-progress marker check (store write-safety block comment)."""
     _store_check(spark, path, what)
     try:
-        meta = spark.read.parquet(path + "/meta").collect()[0]
+        return spark.read.parquet(path + "/meta").collect()[0]
     except Exception as exc:
         raise KqlSemanticError(
             f"{what}: cannot read minhash index meta at '{path}/meta' — "
             "build it with minhash_index_build first"
         ) from exc
+
+
+def _minhash_open_index(
+    spark, path: str, what: str,
+    n_bands: int | None = None, rows_per_band: int | None = None,
+    ngram_n: int | None = None,
+):
+    """Format checks of a minhash_index_build store -> its meta row.
+    Typed errors on a torn/in-progress store (marker), an unreadable
+    meta, a missing `rows` field, a mismatched shingle width
+    (signatures hashed with a different shingle_k cannot serve today's
+    kernel), a band-shape mismatch (signatures computed for a different
+    banding cannot serve this threshold; checked when the caller needs
+    bands) and a missing/mismatched decontaminate n-gram column
+    (checked when the caller needs __ngh)."""
+    meta = _minhash_read_meta(spark, path, what)
     _require_meta_fields(meta, ("rows",), what, path)
     # shingle_k landed in meta in round 14; every store this engine ever
     # built before that used the fixed k=3 kernel, so a missing field is
@@ -2780,6 +2824,23 @@ def _minhash_load_index(
             "— rebuild with minhash_index_build(..., threshold, "
             f"{ngram_n})"
         )
+    return meta
+
+
+def _minhash_load_index(
+    df: DataFrame, idc: str, textc: str, path: str, what: str,
+    n_bands: int | None = None, rows_per_band: int | None = None,
+    ngram_n: int | None = None,
+):
+    """Load a minhash_index_build signature table -> (sigs DataFrame,
+    meta row): the format checks of _minhash_open_index, then staleness
+    vs the current corpus (default O(id column + file metadata); see the
+    guard block comment), then the row-count check."""
+    spark = df.sparkSession
+    meta = _minhash_open_index(
+        spark, path, what, n_bands=n_bands, rows_per_band=rows_per_band,
+        ngram_n=ngram_n,
+    )
     # staleness (round 13 rewrite — see the guard block comment):
     # id-column-pruned aggregation + source-file snapshot by default,
     # full (id, text) content checksum only under the strict flag
@@ -2801,6 +2862,24 @@ def _minhash_load_index(
     # old-format store reports "older builder" (not a spurious count diff)
     _store_count_check(spark, path, "sigs", meta, what)
     return spark.read.parquet(path + "/sigs"), meta
+
+
+def _minhash_work(
+    df: DataFrame, idc: str, text: str, thr: float, idx_path: str | None,
+    what: str,
+) -> DataFrame:
+    """dedup_near's and dedup_clusters' (__id, __gh, __bands): read from
+    the minhash_index_build store at idx_path (shape- and
+    staleness-validated; the optional decontaminate gram column pruned),
+    else computed by the signature pass (_minhash_sigs)."""
+    n_bands, rows_per_band = _minhash_shape(thr)
+    if idx_path is None:
+        return _minhash_sigs(df, idc, text, n_bands, rows_per_band)
+    sigs, _meta = _minhash_load_index(
+        df, idc, text, idx_path, what,
+        n_bands=n_bands, rows_per_band=rows_per_band,
+    )
+    return sigs.select("__id", "__gh", "__bands")
 
 
 @plugin("minhash_index_build")
@@ -2845,33 +2924,17 @@ def _minhash_index_build(ptr, df: DataFrame, args) -> DataFrame:
         raise KqlSemanticError(f"{what}: streaming input not supported")
 
     n_bands, rows_per_band = _minhash_shape(thr)
+    spark = df.sparkSession
+    _store_begin(spark, path, what)
     # one kernel pass per corpus byte: the optional 5th argument also
     # rolls decontaminate's n-token n-gram hashes (__ngh) in the SAME
     # Arrow batch that computes the 3-shingle minhash signatures, so one
     # build serves dedup_near AND decontaminate (round 13 — at 100 TB
     # the per-byte shingling pass is the cost; everything downstream
     # touches only ids, band values and gram hashes)
-    feat = _jaccard_feature_udf(
-        3, n_bands, rows_per_band, mode="token", extra_n=ngram_n
-    )
-    spark = df.sparkSession
-    sig_cols = [
-        "__id",
-        F.col("__f.gh").alias("__gh"),
-        F.col("__f.bands").alias("__bands"),
-    ]
-    if ngram_n is not None:
-        sig_cols.append(F.col("__f.ngh").alias("__ngh"))
-    _store_begin(spark, path, what)
-    (
-        _spread_narrow_scan(
-            df.select(F.col(idc).alias("__id"), F.col(text).cast("string").alias("__s"))
-        )
-        .withColumn("__f", feat(F.coalesce(F.col("__s"), F.lit(" "))))
-        .select(*sig_cols)
-        .write.mode("overwrite")
-        .parquet(path + "/sigs")
-    )
+    _minhash_sigs(
+        df, idc, text, n_bands, rows_per_band, extra_n=ngram_n
+    ).write.mode("overwrite").parquet(path + "/sigs")
     # freshness book-keeping (round 13, see the staleness-guard block
     # comment): id-column-pruned by default, text folded in only under
     # the strict flag (else the build would re-read the whole text
@@ -2921,14 +2984,7 @@ def _minhash_index_update(ptr, df: DataFrame, args) -> DataFrame:
         if name not in df.columns:
             raise KqlSemanticError(f"{what}: no column '{name}' in input")
     spark = df.sparkSession
-    _store_check(spark, path, what)
-    try:
-        meta = spark.read.parquet(path + "/meta").collect()[0]
-    except Exception as exc:
-        raise KqlSemanticError(
-            f"{what}: cannot read minhash index meta at '{path}/meta' — "
-            "build it with minhash_index_build first"
-        ) from exc
+    meta = _minhash_read_meta(spark, path, what)
     _require_meta_fields(
         meta, ("rows_total", "id_chk", "content_chk", "src_files", "ngram_n"),
         what, path,
@@ -2964,28 +3020,10 @@ def _minhash_index_update(ptr, df: DataFrame, args) -> DataFrame:
             "rebuild with minhash_index_build over this expression (store "
             "left untouched)"
         )
-    feat = _jaccard_feature_udf(
-        3, n_bands, rows_per_band, mode="token", extra_n=ngram_n
-    )
-    sig_cols = [
-        "__id",
-        F.col("__f.gh").alias("__gh"),
-        F.col("__f.bands").alias("__bands"),
-    ]
-    if ngram_n is not None:
-        sig_cols.append(F.col("__f.ngh").alias("__ngh"))
     _store_begin(spark, path, what)
-    (
-        _spread_narrow_scan(
-            ndf.select(
-                F.col(idc).alias("__id"), F.col(text).cast("string").alias("__s")
-            )
-        )
-        .withColumn("__f", feat(F.coalesce(F.col("__s"), F.lit(" "))))
-        .select(*sig_cols)
-        .write.mode("append")
-        .parquet(path + "/sigs")
-    )
+    _minhash_sigs(
+        ndf, idc, text, n_bands, rows_per_band, extra_n=ngram_n
+    ).write.mode("append").parquet(path + "/sigs")
     spark.createDataFrame(
         [(n_bands, rows_per_band, 3, int(meta["ngram_n"] or 0), rows, rows,
           id_chk, content_chk, snap,
@@ -3116,7 +3154,7 @@ def _dedup_near(ptr, df: DataFrame, args) -> DataFrame:
     DataFrame op — no driver-side state. Round 14: exact-duplicate
     groups (equal shingle sets) collapse to their min-id representative
     BEFORE banding, killing LSH's quadratic pair blowup on identical
-    boilerplate — see the inline comment; results are bit-identical.
+    boilerplate — see _minhash_components; results are bit-identical.
 
     Optional 4th argument (round 12): a constant string path to a
     PREBUILT signature table written by minhash_index_build — skips the
@@ -3141,63 +3179,21 @@ def _dedup_near(ptr, df: DataFrame, args) -> DataFrame:
     # arity probe: args[2] unguarded was an untyped IndexError)
     thr = _const_float(args[2], "dedup_near") if len(args) > 2 else 0.8
     idx_path = _const_str(args[3], "dedup_near") if len(args) > 3 else None
-
-    n_bands, rows_per_band = _minhash_shape(thr)
-    if idx_path is not None:
-        sigs, _meta = _minhash_load_index(
-            df, idc, text, idx_path, "dedup_near",
-            n_bands=n_bands, rows_per_band=rows_per_band,
-        )
-        # prune the optional decontaminate gram column — dedup only
-        # needs (id, shingle hashes, band values)
-        work = sigs.select("__id", "__gh", "__bands")
-    else:
-        # one Arrow-batched numpy pass computes the distinct 3-token-shingle
-        # hashes AND the minhash band values (mode='token' of the same
-        # vectorized kernel dedup_jaccard uses); docs with no tokens hash to
-        # the empty shingle, so identical empty/null texts still merge —
-        # the pre-rewrite contract
-        feat = _jaccard_feature_udf(3, n_bands, rows_per_band, mode="token")
-        work = (
-            _spread_narrow_scan(
-                df.select(F.col(idc).alias("__id"), F.col(text).cast("string").alias("__s"))
-            )
-            .withColumn("__f", feat(F.coalesce(F.col("__s"), F.lit(" "))))
-            .select(
-                "__id",
-                F.col("__f.gh").alias("__gh"),
-                F.col("__f.bands").alias("__bands"),
-            )
-        )
-    # Round 14 — EXACT-duplicate collapse before banding. Equal shingle
-    # SETS (gh equality; bands are a pure function of gh) mean Jaccard
-    # 1.0: every member of an exact-dup group is a near-dup of its group
-    # min at any threshold, so banding/verify/components only need ONE
-    # representative per distinct gh. This removes LSH's quadratic
-    # hazard for the dominant duplicate class of crawl corpora
-    # (identical boilerplate): a K-way exact clique used to emit
-    # n_bands*K^2/2 band pairs — on sf10 documents (500k docs, 4,992
-    # distinct texts) 540M candidate pairs and a >14-minute run; the
-    # collapsed plan emits 4.2k pairs. Semantics are preserved exactly:
-    # the representative is the group MIN id, so the component canonical
-    # (min over the whole component) is unchanged, and a non-rep member
-    # can never be canonical (its group rep is a strictly smaller dup).
-    # Guarded on thr <= 1: above 1 NOTHING matches (Jaccard maxes at 1),
-    # including exact duplicates, so the collapse must not merge them.
-    reps, labels = _minhash_components(work, thr)
+    work = _minhash_work(df, idc, text, thr, idx_path, "dedup_near")
+    _, labels = _minhash_components(work, thr)
     keep = labels.filter(F.col("node") == F.col("comp")).select(F.col("node"))
     return df.join(keep, df[idc] == keep["node"], "left_semi")
 
 
 def _minhash_components(work: DataFrame, thr: float):
     """Shared candidate/verify/components stage over a signature frame
-    (__id, __gh, __bands) — extracted round 15 so dedup_near (keep the
-    canonical) and dedup_clusters (label every row) run the identical
-    plan: exact-dup collapse -> band equi-join -> EXACT Jaccard verify ->
-    min-id component labels over the representatives. Returns
-    (reps, labels): reps has one row per distinct shingle set (thr <= 1;
-    raw rows above — see the collapse comment in dedup_near), labels is
-    (node, comp) over the representatives."""
+    (__id, __gh, __bands) — dedup_near (keep the canonical),
+    dedup_clusters (label every row) and dedup_jaccard (char-n-gram
+    signatures) run the identical plan: exact-dup collapse -> band
+    equi-join -> EXACT Jaccard verify -> min-id component labels over
+    the representatives. Returns (reps, labels): reps has one row per
+    distinct gram set (thr <= 1; raw rows above — see the collapse
+    comment below), labels is (node, comp) over the representatives."""
     # Round 14 — EXACT-duplicate collapse before banding. Equal shingle
     # SETS (gh equality; bands are a pure function of gh) mean Jaccard
     # 1.0: every member of an exact-dup group is a near-dup of its group
@@ -3222,16 +3218,7 @@ def _minhash_components(work: DataFrame, thr: float):
         )
     else:  # degenerate threshold: keep the raw per-doc rows
         reps = work.localCheckpoint(eager=True)
-    banded = reps.select(
-        "__id", F.posexplode(F.col("__bands")).alias("b", "v")
-    )
-    cand = (
-        banded.alias("l")
-        .join(banded.alias("r"), ["b", "v"])
-        .filter(F.col("l.__id") < F.col("r.__id"))
-        .select(F.col("l.__id").alias("src"), F.col("r.__id").alias("dst"))
-        .distinct()
-    )
+    cand = _band_pairs(reps)
     gl = reps.select(F.col("__id").alias("src"), F.col("__gh").alias("__gl"))
     gr = reps.select(F.col("__id").alias("dst"), F.col("__gh").alias("__gr"))
     inter = F.size(F.array_intersect(F.col("__gl"), F.col("__gr")))
@@ -3275,30 +3262,12 @@ def _dedup_clusters(ptr, df: DataFrame, args) -> DataFrame:
     thr = _const_float(args[2], what) if len(args) > 2 else 0.8
     idx_path = _const_str(args[3], what) if len(args) > 3 else None
 
-    n_bands, rows_per_band = _minhash_shape(thr)
-    if idx_path is not None:
-        sigs, _meta = _minhash_load_index(
-            df, idc, text, idx_path, what,
-            n_bands=n_bands, rows_per_band=rows_per_band,
-        )
-        work = sigs.select("__id", "__gh", "__bands")
-    else:
-        feat = _jaccard_feature_udf(3, n_bands, rows_per_band, mode="token")
-        work = (
-            _spread_narrow_scan(
-                df.select(F.col(idc).alias("__id"), F.col(text).cast("string").alias("__s"))
-            )
-            .withColumn("__f", feat(F.coalesce(F.col("__s"), F.lit(" "))))
-            .select(
-                "__id",
-                F.col("__f.gh").alias("__gh"),
-                F.col("__f.bands").alias("__bands"),
-            )
-            # unlike dedup_near, work feeds TWO consumers here (the
-            # collapse inside _minhash_components AND the member->rep
-            # join) — checkpoint so the per-byte kernel runs once
-            .localCheckpoint(eager=True)
-        )
+    work = _minhash_work(df, idc, text, thr, idx_path, what)
+    if idx_path is None:
+        # unlike dedup_near, work feeds TWO consumers here (the collapse
+        # inside _minhash_components AND the member->rep join) —
+        # checkpoint so the per-byte kernel runs once
+        work = work.localCheckpoint(eager=True)
     reps, labels = _minhash_components(work, thr)
     if thr <= 1.0:
         # member -> its exact-dup representative (same-__gh group min id)
@@ -3395,49 +3364,17 @@ def _dedup_against(ptr, df: DataFrame, args) -> DataFrame:
         idx_path = _const_str(args[2], what)
         thr = _const_float(args[3], what) if len(args) > 3 else 0.8
         n_bands, rows_per_band = _minhash_shape(thr)
-        _store_check(spark, idx_path, what)
-        try:
-            meta = spark.read.parquet(idx_path + "/meta").collect()[0]
-        except Exception as exc:
-            raise KqlSemanticError(
-                f"{what}: cannot read minhash index meta at '{idx_path}/meta'"
-                " — build it with minhash_index_build first"
-            ) from exc
-        if (meta["n_bands"], meta["rows_per_band"]) != (n_bands, rows_per_band):
-            raise KqlSemanticError(
-                f"{what}: index at '{idx_path}' was built with band shape "
-                f"{meta['n_bands']}x{meta['rows_per_band']}, this threshold "
-                f"needs {n_bands}x{rows_per_band} — rebuild with a matching "
-                "threshold"
-            )
-        # kernel-parameter forward compat (round 14, judge "What's wrong
-        # #2"): signatures hashed over a different shingle width cannot
-        # match this kernel's — validate, don't silently under-match.
-        # Missing field = pre-r14 store, always built with k=3 — default
-        # it instead of forcing a rebuild (round 15, ADVICE).
-        _require_meta_fields(meta, ("rows",), what, idx_path)
-        if int(_meta_get(meta, "shingle_k", 3)) != 3:
-            raise KqlSemanticError(
-                f"{what}: index at '{idx_path}' was built over "
-                f"{int(meta['shingle_k'])}-token shingles; this engine's "
-                "kernel uses 3 — rebuild the index"
-            )
+        # format checks and the row-count check, no staleness check: the
+        # reference store is not the input corpus
+        meta = _minhash_open_index(
+            spark, idx_path, what, n_bands=n_bands, rows_per_band=rows_per_band
+        )
         _store_count_check(spark, idx_path, "sigs", meta, what)
         ref_sigs = spark.read.parquet(idx_path + "/sigs").select(
             "__id", "__gh", "__bands"
         )
-    feat = _jaccard_feature_udf(3, n_bands, rows_per_band, mode="token")
-    inp = (
-        _spread_narrow_scan(
-            df.select(F.col(idc).alias("__id"), F.col(text).cast("string").alias("__s"))
-        )
-        .withColumn("__f", feat(F.coalesce(F.col("__s"), F.lit(" "))))
-        .select(
-            "__id",
-            F.col("__f.gh").alias("__gh"),
-            F.col("__f.bands").alias("__bands"),
-        )
-        .localCheckpoint(eager=True)  # feeds the collapse + the final expand
+    inp = _minhash_sigs(df, idc, text, n_bands, rows_per_band).localCheckpoint(
+        eager=True  # feeds the collapse + the final expand
     )
     # Round 14 — exact-duplicate collapse of the INPUT side (dedup_near's
     # rationale): identical batch texts share one banding/verify pass and
@@ -3968,12 +3905,12 @@ def _dedup_jaccard(ptr, df: DataFrame, args) -> DataFrame:
     near-duplicate removal by EXACT character-n-gram Jaccard (SURVEY §2.12;
     the n-gram-Jaccard flavor next to minhash/simhash/embedding):
 
-      1. distinct char n-grams per doc — pure column exprs
-         (`transform(sequence(...), substring)`), no feature hashing, so
-         the final filter is exact (dedup_near's 2^18-bucket HashingTF can
-         collide; this path cannot).
-      2. candidates by minhash BANDING over the gram sets: 100 xxhash64
-         seeds -> 20 bands x 5 rows; a band-value equi-join keeps the
+      1. distinct char n-grams per doc, hashed to 64-bit longs in one
+         Arrow-batched numpy pass (_jaccard_feature_udf) — the same
+         64-bit hashing dedup_near applies to its 3-token shingles, so
+         the filter is exact up to a negligible 64-bit collision.
+      2. candidates by minhash BANDING over the gram sets: 100
+         splitmix64 permutations -> 20 bands x 5 rows; a band-value equi-join keeps the
          shuffle bucket-local (never all-pairs). The candidate stage is
          PROBABILISTIC (the filter is exact): a pair at Jaccard s is
          missed with probability (1-s^5)^20 — 3.5e-4 at s=0.8, 1.8e-8 at
@@ -4016,45 +3953,17 @@ def _dedup_jaccard(ptr, df: DataFrame, args) -> DataFrame:
         .withColumn("__f", feat(F.col("__s")))
         .select("__id", F.col("__f.gh").alias("__gh"), F.col("__f.bands").alias("__bands"))
     )
-    # exact-duplicate collapse before banding (round 14 — see dedup_near:
-    # equal gram sets are Jaccard 1.0, so one min-id representative per
-    # distinct gh carries its whole group; results are bit-identical and
-    # LSH's quadratic blowup on identical boilerplate is gone)
-    reps = (
-        work.groupBy("__gh")
-        .agg(F.min("__id").alias("__id"), F.first("__bands").alias("__bands"))
-        .select("__id", "__gh", "__bands")
-        .localCheckpoint(eager=True)  # feeds band join + 2 verify joins + nodes
-    )
+    # the threshold is in [0.5, 1], so the exact-dup collapse always
+    # applies (see _minhash_components)
+    _, labels = _minhash_components(work, thr)
     empties = df.filter(~F.coalesce(F.length(s) > 0, F.lit(False))).select(
         F.col(idc).alias("node")
     )
-    # band rows carry ONLY (id, band, value): candidates are a tiny
-    # fraction of band rows, so fetching gram hashes back via two id-joins
-    # is far cheaper than exploding the arrays through the self-join
-    banded = reps.select(
-        "__id", F.posexplode(F.col("__bands")).alias("b", "v")
+    keep = (
+        labels.filter(F.col("node") == F.col("comp"))
+        .select(F.col("node"))
+        .union(empties)
     )
-    cand = (
-        banded.alias("l")
-        .join(banded.alias("r"), ["b", "v"])
-        .filter(F.col("l.__id") < F.col("r.__id"))
-        .select(F.col("l.__id").alias("src"), F.col("r.__id").alias("dst"))
-        .distinct()
-    )
-    gl = reps.select(F.col("__id").alias("src"), F.col("__gh").alias("__gl"))
-    gr = reps.select(F.col("__id").alias("dst"), F.col("__gh").alias("__gr"))
-    inter = F.size(F.array_intersect(F.col("__gl"), F.col("__gr")))
-    union_ = F.size(F.array_union(F.col("__gl"), F.col("__gr")))
-    pairs = (
-        cand.join(gl, "src")
-        .join(gr, "dst")
-        .filter((inter / union_) >= F.lit(thr))
-        .select("src", "dst")
-    )
-    keep = _min_id_components(
-        reps.select(F.col("__id").alias("node")), pairs
-    ).union(empties)
     return df.join(keep, df[idc] == keep["node"], "left_semi")
 
 
