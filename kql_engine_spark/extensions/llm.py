@@ -2236,7 +2236,7 @@ def _similarity_join(ptr, df: DataFrame, args) -> DataFrame:
     # K^2 member pairs in EVERY band, each dragging two dim-double
     # arrays through the shuffle — 100-way cliques at sf10 spilled the
     # disk to death. Instead: LSH + exact verify run once per DISTINCT
-    # vector (representative = min id, dedup_near's rationale), and
+    # vector (representative = min id, see _minhash_components), and
     # member pairs EXPAND from the verified representative pairs with
     # id-only columns. Output-equivalent by construction:
     #   * recall — every member's bands equal its representative's, so
@@ -3376,10 +3376,10 @@ def _dedup_against(ptr, df: DataFrame, args) -> DataFrame:
     inp = _minhash_sigs(df, idc, text, n_bands, rows_per_band).localCheckpoint(
         eager=True  # feeds the collapse + the final expand
     )
-    # Round 14 — exact-duplicate collapse of the INPUT side (dedup_near's
-    # rationale): identical batch texts share one banding/verify pass and
-    # a matched group expands back to ALL its ids afterwards (identical
-    # text => identical match outcome). The REFERENCE side is NOT
+    # Round 14 — exact-duplicate collapse of the INPUT side (rationale at
+    # _minhash_components): identical batch texts share one banding/verify
+    # pass and a matched group expands back to ALL its ids afterwards
+    # (identical text => identical match outcome). The REFERENCE side is NOT
     # collapsed: it is never self-joined (the quadratic hazard does not
     # exist there) and a collapse would add a full shuffle of the 100 TB
     # store's gram arrays; ref-clique cost is linear per matching input
@@ -3910,12 +3910,12 @@ def _dedup_jaccard(ptr, df: DataFrame, args) -> DataFrame:
          64-bit hashing dedup_near applies to its 3-token shingles, so
          the filter is exact up to a negligible 64-bit collision.
       2. candidates by minhash BANDING over the gram sets: 100
-         splitmix64 permutations -> 20 bands x 5 rows; a band-value equi-join keeps the
-         shuffle bucket-local (never all-pairs). The candidate stage is
-         PROBABILISTIC (the filter is exact): a pair at Jaccard s is
-         missed with probability (1-s^5)^20 — 3.5e-4 at s=0.8, 1.8e-8 at
-         s=0.9 — while random pairs (s<=0.1) collide with <2e-4
-         probability, so the join stays sparse at corpus scale.
+         splitmix64 permutations -> 20 bands x 5 rows; a band-value
+         equi-join keeps the shuffle bucket-local (never all-pairs). The
+         candidate stage is PROBABILISTIC (the filter is exact): a pair at
+         Jaccard s is missed with probability (1-s^5)^20 — 3.5e-4 at
+         s=0.8, 1.8e-8 at s=0.9 — while random pairs (s<=0.1) collide
+         with <2e-4 probability, so the join stays sparse at corpus scale.
          Thresholds < 0.5 sit below the s-curve midpoint
          (1/20)^(1/5) ~= 0.55 and raise a typed error rather than
          silently losing recall.
